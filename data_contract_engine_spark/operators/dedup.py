@@ -31,6 +31,8 @@ from typing import List, Optional, Sequence
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+from .textstats import word_grams, ws_tokens
+
 
 def content_digest(text: Column) -> Column:
     """Stable content hash for exact dedup (md5 hex, portable to SQL oracles)."""
@@ -78,22 +80,11 @@ def exact_dedup(
     ).drop("__h")
 
 
-def tokens(text: Column) -> Column:
-    """Whitespace tokens, empty strings dropped — shared with textstats
-    (one tokenizer across shingles, grams, token counts and the SQL
-    oracles, which all filter empties)."""
-    from .textstats import ws_tokens
-
-    return ws_tokens(text)
-
-
 def word_shingles(text: Column, k: int = 3) -> Column:
     """Array of DISTINCT k-word shingles of ``text`` (space-joined).
     Set semantics over :func:`textstats.word_grams` (one gram builder);
     docs with fewer than k words produce no shingles — matching the
     oracle's positional self-join exactly."""
-    from .textstats import word_grams
-
     return F.array_distinct(word_grams(text, k))
 
 
@@ -597,7 +588,7 @@ def simhash(
     token_hash = _portable_token_hash() if portable_hash else F.xxhash64("tok")
     tok = df.select(
         F.col(id_col).alias("id"),
-        F.explode(tokens(F.col(text_col))).alias("tok"),
+        F.explode(ws_tokens(F.col(text_col))).alias("tok"),
     ).withColumn("h", token_hash)
     votes = [
         F.sum(

@@ -85,11 +85,22 @@ def cosine(a: Column, b: Column) -> Column:
 # --------------------------------------------------------------------------
 
 
+def _stack_vectors(v: pd.Series, fn: str):
+    """One Arrow batch of an array column as a rows×dim float64 matrix.
+    A null vector raises a named error here (``np.stack`` would fail on
+    it with an opaque shape error)."""
+    import numpy as np
+
+    if v.isna().any():
+        raise ValueError(f"{fn}: null embedding vector")
+    return np.stack(v.to_numpy()).astype("float64", copy=False)
+
+
 def pair_dot_pandas(dim: int):
     """Arrow-batched dot product of two array columns, fold-exact (see
     block comment above). Inputs must be non-null ``dim``-width arrays;
-    returns double. ~64 SIMD ops per Arrow batch instead of ~450
-    interpreted expression nodes per row."""
+    returns double (a null vector raises ``ValueError``). ~64 SIMD ops per
+    Arrow batch instead of ~450 interpreted expression nodes per row."""
     import numpy as np
     from pyspark.sql.functions import pandas_udf
 
@@ -97,8 +108,8 @@ def pair_dot_pandas(dim: int):
     def _dot(a: pd.Series, b: pd.Series) -> pd.Series:
         if len(a) == 0:
             return pd.Series([], dtype="float64")
-        A = np.stack(a.to_numpy()).astype("float64", copy=False)
-        B = np.stack(b.to_numpy()).astype("float64", copy=False)
+        A = _stack_vectors(a, "pair_dot_pandas")
+        B = _stack_vectors(b, "pair_dot_pandas")
         if A.shape[1] != dim or B.shape[1] != dim:
             # loud, not silent: a wider vector would otherwise fold only
             # its first `dim` elements and return a WRONG dot product
@@ -139,7 +150,7 @@ def query_cosine_pandas(query_vec: Sequence[float]):
     def _score(v: pd.Series) -> pd.Series:
         if len(v) == 0:
             return pd.Series([], dtype="float64")
-        M = np.stack(v.to_numpy()).astype("float64", copy=False)
+        M = _stack_vectors(v, "query_cosine_pandas")
         if M.shape[1] != dim:
             raise ValueError(
                 f"query_cosine_pandas: query dim {dim} != vector width "
@@ -186,7 +197,7 @@ def band_buckets_pandas(
     def _buckets(v: pd.Series) -> pd.Series:
         if len(v) == 0:
             return pd.Series([], dtype="object")
-        M = np.stack(v.to_numpy()).astype("float64", copy=False)
+        M = _stack_vectors(v, "band_buckets_pandas")
         if M.shape[1] != dim:
             # a wrong plane width would silently bucket on a prefix —
             # the exact failure mode the mandatory dim= exists to stop
@@ -302,9 +313,7 @@ def cosine_topk_multi_pandas(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            M = np.stack(pdf[vec_col].to_numpy()).astype(
-                "float64", copy=False
-            )
+            M = _stack_vectors(pdf[vec_col], "cosine_topk_multi_pandas")
             acc = np.zeros((len(M), nq), dtype="float64")
             nrm = np.zeros(len(M), dtype="float64")
             for i in range(dim):

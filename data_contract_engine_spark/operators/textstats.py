@@ -14,6 +14,11 @@ from typing import Dict, Sequence
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
+# A whitespace token: a maximal run of non-whitespace (Java ``\s`` =
+# space, \t, \n, \x0B, \f, \r). The tokenizer and the gram builder both
+# derive from it, so token counts, grams and shingles always agree.
+TOKEN_REGEX = r"\S+"
+
 # BPE-ish pre-tokenizer: letter runs | digit runs | single non-space symbol
 BPE_REGEX = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
 
@@ -28,8 +33,9 @@ STOPWORDS: Dict[str, Sequence[str]] = {
 
 
 def ws_tokens(text: Column) -> Column:
-    """Whitespace tokens; empty text → empty array (not [''])."""
-    return F.filter(F.split(F.trim(text), r"\s+"), lambda t: t != "")
+    """Whitespace tokens; empty text → empty array (not ['']), null text
+    → null. One compiled regex scan, no lambda."""
+    return F.regexp_extract_all(text, F.lit(TOKEN_REGEX), F.lit(0))
 
 
 def ws_token_count(text: Column) -> Column:
@@ -229,15 +235,26 @@ def word_grams(text: Column, k: int = 2) -> Column:
     """Overlapping k-word grams with multiplicity (repetition analysis
     needs duplicate grams; `dedup.word_shingles` wraps this in
     array_distinct for set semantics — ONE gram builder for both). Fewer
-    than k words → empty array, matching the SQL oracles' positional
-    self-join, which likewise emits nothing for short docs."""
-    toks = ws_tokens(text)
-    n = F.size(toks)
-    grams = F.transform(
-        F.sequence(F.lit(1), F.greatest(n - F.lit(k - 1), F.lit(1))),
-        lambda i: F.concat_ws(" ", F.slice(toks, i, k)),
+    than k words or null text → empty array, matching the SQL oracles'
+    positional self-join, which likewise emits nothing for short docs.
+
+    One compiled pass per document: separators collapse to single
+    spaces, then a zero-width lookahead anchored at every token start
+    captures that token and the k-1 after it. No HOF lambda: HOFs are
+    interpreted, and one that captures the token array re-tokenizes the
+    document once per gram."""
+    if k < 1:
+        raise ValueError(f"k must be >= 1, got {k}")
+    norm = F.regexp_replace(text, r"\s+", " ")
+    # token start = string start or after a space. Not (?<!\S): Java
+    # retries an empty match one UTF-16 unit later, and there a lookbehind
+    # \S cannot match the split surrogate pair, so grams would also start
+    # inside any non-BMP character (e.g. an emoji)
+    gram = rf"(?:^|(?<= ))(?=({TOKEN_REGEX}(?: {TOKEN_REGEX}){{{k - 1}}}))"
+    return F.coalesce(
+        F.regexp_extract_all(norm, F.lit(gram), F.lit(1)),
+        F.array().cast("array<string>"),
     )
-    return F.when(n >= k, grams).otherwise(F.array().cast("array<string>"))
 
 
 def repetition_features(

@@ -13,6 +13,8 @@ import re
 from datetime import datetime
 from typing import Any, Dict, List, Tuple
 
+from pyspark.sql import functions as F
+
 from data_contract_engine_spark.contracts.model import (
     Contract,
     FieldDef,
@@ -143,3 +145,26 @@ def validate_record(record: Dict[str, Any], contract: Contract):
         elif fd.type == "object":
             _validate_object(name, v, fd, out)
     return out[:MAX_ERRORS]
+
+
+# --------------------------------------------------------------------------
+# Reference spec for the whitespace tokenizer and k-word gram builder in
+# ``operators/textstats.py``: the earlier lambda forms, kept only to pin
+# the compiled regex forms to them. Too slow for production (the
+# ``transform`` lambda captures ``toks``, so every gram re-tokenizes the
+# whole document).
+# --------------------------------------------------------------------------
+
+
+def ws_tokens_ref(text):
+    return F.filter(F.split(F.trim(text), r"\s+"), lambda t: t != "")
+
+
+def word_grams_ref(text, k: int):
+    toks = ws_tokens_ref(text)
+    n = F.size(toks)
+    grams = F.transform(
+        F.sequence(F.lit(1), F.greatest(n - F.lit(k - 1), F.lit(1))),
+        lambda i: F.concat_ws(" ", F.slice(toks, i, k)),
+    )
+    return F.when(n >= k, grams).otherwise(F.array().cast("array<string>"))

@@ -185,6 +185,36 @@ def test_stream_dedup_command(spark, tmp_path, capsys, monkeypatch):
     assert spark.read.parquet(out).count() == n_before
 
 
+@pytest.mark.parametrize("docs", [
+    [(1, "alpha beta gamma delta epsilon zeta eta theta iota kappa"),
+     (2, "entirely different content about rivers and mountains and "
+         "forests everywhere")],
+    None,  # no input file at all: the drain runs no micro-batch
+], ids=["no_near_dups", "no_input_files"])
+def test_stream_dedup_command_no_candidates(spark, tmp_path, capsys,
+                                            monkeypatch, docs):
+    """A drain that yields zero candidate rows reports 0. With no input
+    file the sink writes no data file, so the count must not depend on
+    inferring the output's schema."""
+    monkeypatch.setenv("DCE_CLI_KEEP_SESSION", "1")
+    src = tmp_path / "docs_dir"
+    src.mkdir()
+    if docs is not None:
+        spark.createDataFrame(docs, "doc_id long, text string").coalesce(
+            1
+        ).write.parquet(str(src / "b1"))
+
+    out = str(tmp_path / "pairs_out")
+    rc = cli.main([
+        "stream-dedup", "--input", str(src) + "/*",
+        "--schema", "doc_id bigint, text string",
+        "--out", out, "--checkpoint", str(tmp_path / "sd_ckpt"),
+    ])
+    assert rc == 0
+    rep = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert rep == {"candidate_rows": 0, "out": out}
+
+
 def test_sample_command(spark, tmp_path, capsys, monkeypatch):
     import json
 

@@ -144,6 +144,28 @@ def test_cosine_topk_multi_pandas_matches_crossjoin(spark):
         similarity.cosine_topk_multi_pandas(bad, queries, k=3).collect()
 
 
+def test_arrow_vector_udfs_name_null_vectors(spark):
+    """A null embedding raises a named ValueError from every Arrow vector
+    UDF (checked per batch, before np.stack), never an opaque shape
+    error or a silently skipped row."""
+    emb = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, None)], "vec_id long, embedding array<double>"
+    ).coalesce(1)
+    v = F.col("embedding")
+    cases = {
+        "query_cosine_pandas": emb.select(
+            similarity.query_cosine_pandas([1.0, 0.0])(v)),
+        "band_buckets_pandas": emb.select(
+            similarity.band_buckets_pandas(4, 2, 1, dim=2)(v)),
+        "pair_dot_pandas": emb.select(similarity.pair_dot_pandas(2)(v, v)),
+        "cosine_topk_multi_pandas": similarity.cosine_topk_multi_pandas(
+            emb, [(0, [1.0, 0.0])], k=1),
+    }
+    for fn, df in cases.items():
+        with pytest.raises(Exception, match=f"{fn}: null embedding vector"):
+            df.collect()
+
+
 def test_ann_lsh_recovers_exact_neighbor(spark):
     import random
 
