@@ -1,8 +1,13 @@
 """Benchmark harness — headline queries at $SPARK_GRAFT_SF_DIR.
 
-Prints ONE JSON line:
+The last stdout line is a JSON summary of at most SUMMARY_MAX_CHARS
+characters (see :func:`summary`):
   {"metric": ..., "value": total_sec, "unit": "sec",
-   "queries": {name: sec, ...}, "sf": ..., "throughput": {...}}
+   "queries": {name: sec, ...}, "sf": ..., "cpus": ...,
+   "throughput": {...}, "scaling_evidence": {...}}
+The full result (first-run walls and per-run attribution: JIT/GC/spin/
+steal series and sub-step walls) goes to $DCE_BENCH_FULL_OUT (default
+BENCH_FULL.json beside this file).
 
 The flagship number is the full contract suite (schema rules + quality
 aggregates + salted uniqueness + broadcast referential + PSI drift) over
@@ -30,6 +35,37 @@ from data_contract_engine_spark.fixtures.transcripts_sql import (
 from data_contract_engine_spark.operators import dedup, similarity, textstats
 
 import __spark_entry__ as entrymod
+
+# round runners parse the last stdout line from a 2,000-character tail
+SUMMARY_MAX_CHARS = 1500
+SUMMARY_KEYS = (
+    "metric", "value", "unit", "queries", "sf", "cpus", "throughput",
+    "scaling_evidence",
+)
+
+
+def _numbers_only(d: dict) -> dict:
+    """``d`` without its free-text notes (nested dicts kept)."""
+    return {
+        k: _numbers_only(v) if isinstance(v, dict) else v
+        for k, v in d.items()
+        if k not in ("note", "source")
+    }
+
+
+def summary(full: dict) -> str:
+    """The machine-parsed last stdout line for the full result ``full``:
+    headline value, steady per-query walls, throughput and scaling
+    evidence (without its notes). Keys are dropped from the end of
+    SUMMARY_KEYS until the line is at most SUMMARY_MAX_CHARS long."""
+    out = {k: full[k] for k in SUMMARY_KEYS if k in full}
+    if "scaling_evidence" in out:
+        out["scaling_evidence"] = _numbers_only(out["scaling_evidence"])
+    line = json.dumps(out, separators=(",", ":"))
+    while len(line) > SUMMARY_MAX_CHARS:
+        out.popitem()
+        line = json.dumps(out, separators=(",", ":"))
+    return line
 
 
 def timed(fn):
@@ -518,8 +554,13 @@ def main():
             out["scaling_evidence"] = json.load(f)
     except OSError:
         pass
-    print(json.dumps(out))
+    full_out = os.environ.get("DCE_BENCH_FULL_OUT") or os.path.join(
+        os.path.dirname(os.path.abspath(__file__)), "BENCH_FULL.json"
+    )
+    with open(full_out, "w") as f:
+        json.dump(out, f, indent=1)
     spark.stop()
+    print(summary(out))
 
 
 if __name__ == "__main__":

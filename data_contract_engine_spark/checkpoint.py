@@ -152,16 +152,13 @@ def validate_resumable(
     run = engine.validate(sub, contract, key_columns=key_columns)
 
     if violations_out:
-        from .sources import sinks
-
         # ALWAYS project the partition column into the violations frame
         # (it exists in run.validated) so the write is partitioned by it —
         # a dynamic-overwrite re-run then replaces only its own partitions.
-        # (Previously this silently fell back to a full unpartitioned
-        # overwrite when partition_col was not among the key columns,
-        # clobbering completed partitions' violations on resume.)
-        viol = run.violations(extra_cols=[partition_col])
-        sinks.write_violations(viol, violations_out, [partition_col])
+        # The same scan observes the report's fused aggregate.
+        run.write_violations(
+            violations_out, [partition_col], extra_cols=[partition_col]
+        )
 
     agg_cols = [
         F.count(F.lit(1)).alias("total"),

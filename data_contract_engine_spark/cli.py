@@ -106,12 +106,15 @@ def cmd_validate(args) -> int:
     else:
         run = engine.validate(df, contract, key_columns=keys)
 
-    rep = run.report()
     if args.violations_out and not args.checkpoint:
-        # non-resumable path: plain write (resumable runs already wrote
-        # them inside validate_resumable, before the checkpoint flip)
+        # non-resumable path (resumable runs already wrote them inside
+        # validate_resumable, before the checkpoint flip); written before
+        # the report so the report reuses the write's aggregate
         part_cols = [args.partition_col] if args.partition_col else None
-        sinks.write_violations(run.violations(), args.violations_out, part_cols)
+        run.write_violations(
+            args.violations_out, part_cols, extra_cols=part_cols or ()
+        )
+    rep = run.report()
     if args.summary_out:
         sinks.append_run_summary(
             spark, args.summary_out, args.run_id, contract.name,

@@ -27,12 +27,14 @@ Verdict semantics (parity):
 
 from __future__ import annotations
 
+import dataclasses
 import time
 import uuid
 from dataclasses import dataclass, field as dc_field
+from functools import reduce
 from typing import Any, Dict, List, Optional, Sequence, Union
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, Observation, SparkSession, functions as F
 
 from .compiler.expressions import CompileOptions, CompiledContract, compile_contract
 from .contracts.model import Contract, SCHEMA_ERROR_TYPES, SEVERITY_ERROR
@@ -47,6 +49,7 @@ from .quality.aggregates import (
     decode_quality_row,
     quality_score,
 )
+from .sources import sinks
 
 
 @dataclass
@@ -79,6 +82,11 @@ class ValidationRun:
     validated: DataFrame            # source columns + passed (+ errors when
     #                                 the contract needs nested evaluation)
     _report: Optional[BatchReport] = None
+    # drift key -> fused agg exprs; shared with the engine's compile cache
+    _aggs: Dict[str, List[Column]] = dc_field(default_factory=dict)
+    # set by write_violations once its write returned: report() reads
+    # the fused aggregate from it instead of scanning again
+    _observation: Optional[Observation] = None
 
     def _failed_with_errors(self) -> DataFrame:
         """Failed rows with the full error-struct array.
@@ -145,10 +153,10 @@ class ValidationRun:
     def _drift_prep(self):
         """(drift_exprs, drift_edges, drift_cats, base_bins): a precomputed
         snapshot costs ZERO jobs; a baseline DataFrame costs two (edges +
-        histogram) — production snapshots once at baseline creation
-        (drift_op.baseline_snapshot). Columns whose drift spec declares
-        ``type: categorical`` use the baseline's category set as the bucket
-        space (+ an ``__other__`` bucket) instead of numeric bin edges."""
+        histogram) once per engine (:meth:`ContractEngine._drift_snapshot`).
+        Columns whose drift spec declares ``type: categorical`` use the
+        baseline's category set as the bucket space (+ an ``__other__``
+        bucket) instead of numeric bin edges."""
         rules = self.contract.quality
         drift_exprs: Dict[str, str] = {}
         drift_edges: Dict[str, list] = {}
@@ -159,19 +167,7 @@ class ValidationRun:
                 col: spec.get("expr") or col
                 for col, spec in rules.drift.items()
             }
-            cat_cols = [
-                c for c, spec in rules.drift.items()
-                if spec.get("type") == "categorical"
-            ]
-            snapshot = self.engine.drift_baseline_snapshot
-            if snapshot is None and self.engine.drift_baseline is not None:
-                bins = max(
-                    spec.get("bins", 10) for spec in rules.drift.values()
-                )
-                snapshot = drift_op.baseline_snapshot(
-                    self.engine.drift_baseline, drift_exprs, bins,
-                    categorical=cat_cols,
-                )
+            snapshot = self.engine._drift_snapshot(rules.drift, drift_exprs)
             if snapshot:
                 drift_edges = {
                     c: s["edges"] for c, s in snapshot.items() if s.get("edges")
@@ -235,24 +231,60 @@ class ValidationRun:
             )
         return agg_exprs + quality_exprs
 
+    def _fused(self):
+        """(fused agg exprs, drift_edges, drift_cats, base_bins). The
+        expression list is built once per drift state and kept in the
+        engine's compile cache: building it costs hundreds of Py4J round
+        trips, reusing it none."""
+        drift_exprs, drift_edges, drift_cats, base_bins = self._drift_prep()
+        key = repr((drift_exprs, drift_edges, drift_cats))
+        exprs = self._aggs.get(key)
+        if exprs is None:
+            exprs = self._aggs[key] = self._agg_exprs(
+                drift_exprs, drift_edges, drift_cats
+            )
+        return exprs, drift_edges, drift_cats, base_bins
+
     def report(self, sample_errors: int = 50) -> BatchReport:
         """One fused agg pass computes schema counters + error-type counts
         + freshness + completeness + statistics + literal-vocab referential
         + drift current-histograms; only uniqueness (its own shuffle),
         table-backed referential (broadcast anti-join) and the gated sample
-        job add scans. See :meth:`execute` for the zero-extra-scan variant
-        that also writes the violations artifact."""
+        job add scans. After :meth:`write_violations` the fused row comes
+        from that write's scan and this pass is skipped."""
         if self._report is not None:
             return self._report
         t0 = time.time()
-        drift_exprs, drift_edges, drift_cats, base_bins = self._drift_prep()
-        exprs = self._agg_exprs(drift_exprs, drift_edges, drift_cats)
-        # run over the validated frame (it carries the source columns)
-        agg_row = self.validated.agg(*exprs).collect()[0].asDict()
+        exprs, drift_edges, drift_cats, base_bins = self._fused()
+        if self._observation is not None:
+            agg_row = dict(self._observation.get)
+        else:
+            # run over the validated frame (it carries the source columns)
+            agg_row = self.validated.agg(*exprs).collect()[0].asDict()
         self._report = self._finish_report(
             agg_row, drift_edges, drift_cats, base_bins, t0, sample_errors
         )
         return self._report
+
+    def write_violations(
+        self,
+        path: str,
+        partition_cols: Optional[Sequence[str]] = None,
+        extra_cols: Sequence[str] = (),
+    ) -> None:
+        """Write :meth:`violations` to ``path`` while the SAME scan
+        collects the fused report aggregate via ``DataFrame.observe``, so
+        a later :meth:`report` runs no aggregate pass of its own."""
+        obs = Observation(f"contract:{self.contract.name}")
+        observed = dataclasses.replace(
+            self, validated=self.validated.observe(obs, *self._fused()[0])
+        )
+        sinks.write_violations(
+            observed.violations(extra_cols), path, partition_cols
+        )
+        # only after the write returned: a failed write never ran the
+        # observed plan, and obs.get would wait for it forever
+        self._observation = obs
 
     def execute(
         self,
@@ -260,36 +292,12 @@ class ValidationRun:
         partition_cols: Optional[Sequence[str]] = None,
         sample_errors: int = 0,
     ) -> BatchReport:
-        """ONE-action execution for the 100 TB shape: the violations
-        artifact is written while the SAME scan's aggregates are collected
-        via ``DataFrame.observe`` — no separate aggregate pass over the
-        input. Remaining extra jobs: uniqueness (needs its own shuffle) and
-        drift scoring (tiny histogram relation)."""
-        from pyspark.sql import Observation
-
-        t0 = time.time()
-        drift_exprs, drift_edges, drift_cats, base_bins = self._drift_prep()
-        exprs = self._agg_exprs(drift_exprs, drift_edges, drift_cats)
-        obs = Observation(f"contract:{self.contract.name}")
-        observed = self.validated.observe(obs, *exprs)
-        run_like = ValidationRun(
-            engine=self.engine,
-            contract=self.contract,
-            df=self.df,
-            compiled=self.compiled,
-            key_columns=self.key_columns,
-            validated=observed,
-        )
-        from .sources import sinks as _sinks  # local import avoids cycle
-
-        _sinks.write_violations(
-            run_like.violations(), violations_path, partition_cols
-        )
-        agg_row = dict(obs.get)
-        self._report = self._finish_report(
-            agg_row, drift_edges, drift_cats, base_bins, t0, sample_errors
-        )
-        return self._report
+        """ONE-action execution for the 100 TB shape: the violations write
+        and the report's aggregates share one scan. Remaining extra jobs:
+        uniqueness (needs its own shuffle) and drift scoring (tiny
+        histogram relation)."""
+        self.write_violations(violations_path, partition_cols)
+        return self.report(sample_errors)
 
     def _finish_report(
         self, agg_row, drift_edges, drift_cats, base_bins, t0, sample_errors
@@ -576,6 +584,55 @@ class ContractEngine:
         self.drift_baseline_snapshot = drift_baseline_snapshot
         self.now_epoch = now_epoch
         self.compile_options = compile_options or CompileOptions()
+        # (repr(contract), schema json, repr(options)) -> _Compiled: the
+        # Column trees cost thousands of Py4J round trips to build and are
+        # identical on every call, so they are built once per engine
+        self._compiled: Dict[tuple, _Compiled] = {}
+        # repr(drift rules) -> (baseline DataFrame, its snapshot)
+        self._snapshots: Dict[str, tuple] = {}
+
+    def _drift_snapshot(self, drift_rules: Dict[str, Any], drift_exprs):
+        """The drift baseline snapshot: the one given, else computed from
+        ``drift_baseline`` (two jobs) once per drift rule set and baseline
+        frame."""
+        if self.drift_baseline_snapshot is not None or self.drift_baseline is None:
+            return self.drift_baseline_snapshot
+        key = repr(drift_rules)
+        hit = self._snapshots.get(key)
+        if hit is None or hit[0] is not self.drift_baseline:
+            bins = max(spec.get("bins", 10) for spec in drift_rules.values())
+            cat_cols = [
+                c for c, spec in drift_rules.items()
+                if spec.get("type") == "categorical"
+            ]
+            snapshot = drift_op.baseline_snapshot(
+                self.drift_baseline, drift_exprs, bins, categorical=cat_cols
+            )
+            hit = self._snapshots[key] = (self.drift_baseline, snapshot)
+        return hit[1]
+
+    def _compile(self, contract: Contract, schema) -> "_Compiled":
+        key = (repr(contract), schema.json(), repr(self.compile_options))
+        hit = self._compiled.get(key)
+        if hit is not None:
+            return hit
+        opts = self.compile_options
+        compiled = compile_contract(contract, schema, opts)
+        if compiled.predicates is not None:
+            # lean path: `passed` from the boolean predicate twin — tiny
+            # expression tree (fast planning per job, full codegen, no
+            # array allocation); the error-struct array is only attached in
+            # the violations/sample jobs (see _failed_with_errors)
+            any_fail = reduce(
+                lambda a, b: a | b,
+                [c for _, _, c in compiled.predicates],
+                F.lit(False),
+            )
+            passed = ~F.coalesce(any_fail, F.lit(False))
+        else:
+            passed = F.size(F.col(opts.errors_column)) == 0
+        hit = self._compiled[key] = _Compiled(compiled, passed)
+        return hit
 
     def validate(
         self,
@@ -585,26 +642,15 @@ class ContractEngine:
     ) -> ValidationRun:
         if isinstance(contract, str):
             contract = parse_contract_yaml(contract)
-        compiled = compile_contract(contract, df.schema, self.compile_options)
+        entry = self._compile(contract, df.schema)
+        compiled = entry.compiled
         keys = list(key_columns) if key_columns else [
             c for c in df.columns[:2]
         ]
         ec = self.compile_options.errors_column
         if compiled.predicates is not None:
-            # lean path: `passed` from the boolean predicate twin — tiny
-            # expression tree (fast planning per job, full codegen, no
-            # array allocation); the error-struct array is only attached in
-            # the violations/sample jobs (see _failed_with_errors)
-            from functools import reduce as _reduce
-
-            any_fail = _reduce(
-                lambda a, b: a | b,
-                [c for _, _, c in compiled.predicates],
-                F.lit(False),
-            )
             validated = df.withColumn(
-                self.compile_options.passed_column,
-                ~F.coalesce(any_fail, F.lit(False)),
+                self.compile_options.passed_column, entry.passed
             )
         else:
             # nested contracts: two-layer projection so the error-array
@@ -613,9 +659,7 @@ class ContractEngine:
             validated = df.select(
                 "*",
                 compiled.errors_col.alias(ec),
-            ).withColumn(
-                self.compile_options.passed_column, F.size(F.col(ec)) == 0
-            )
+            ).withColumn(self.compile_options.passed_column, entry.passed)
         return ValidationRun(
             engine=self,
             contract=contract,
@@ -623,4 +667,15 @@ class ContractEngine:
             compiled=compiled,
             key_columns=keys,
             validated=validated,
+            _aggs=entry.aggs,
         )
+
+
+@dataclass
+class _Compiled:
+    """One compile-cache entry: the compiled contract, its ``passed``
+    column and, per drift state, the fused aggregate expressions."""
+
+    compiled: CompiledContract
+    passed: Column
+    aggs: Dict[str, List[Column]] = dc_field(default_factory=dict)

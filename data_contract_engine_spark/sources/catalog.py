@@ -232,6 +232,11 @@ class SnapshotParquetCatalog(TableCatalog):
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
+        # fault-injection seam: called as pause_hook(point, table, version)
+        # at named points of a commit ("manifest_written": the manifest is
+        # on disk, VERSION not yet flipped), so tests can interleave
+        # writers deterministically
+        self.pause_hook = None
 
     # -- snapshot bookkeeping ---------------------------------------------
 
@@ -304,8 +309,10 @@ class SnapshotParquetCatalog(TableCatalog):
         # (round-4 advice). Reclamation therefore requires the manifest to
         # be older than TORN_MANIFEST_GRACE_SEC (a live writer flips
         # VERSION milliseconds after creating it); a younger conflict is a
-        # concurrent commit and raises. As a backstop for a writer stalled
-        # past the grace window, every commit verifies AFTER the VERSION
+        # concurrent commit and raises. A writer stalled past the grace
+        # window re-reads VERSION just before its flip and refuses if
+        # another writer already reached its version, so VERSION never
+        # moves backwards; as a backstop, every commit verifies AFTER the
         # flip that the manifest still carries its own writer id and
         # raises ConcurrentWriteError if the slot was reclaimed — so a
         # lost update is reported, never silent. NOTE: expire_snapshots
@@ -360,6 +367,18 @@ class SnapshotParquetCatalog(TableCatalog):
                     continue
         with os.fdopen(fd, "w") as f:
             json.dump(snap, f)
+        if self.pause_hook is not None:
+            self.pause_hook("manifest_written", table, new_v)
+        # a writer stalled past the grace window may have had its slot
+        # reclaimed and later versions committed meanwhile: flipping now
+        # would move VERSION back below them and lose those commits
+        if self._version(table) >= new_v:
+            raise ConcurrentWriteError(
+                f"table {table!r}: version {new_v} was committed by another "
+                "writer after this writer's manifest was reclaimed (stall "
+                "past the torn-manifest grace window); this commit did NOT "
+                "apply"
+            )
         tmp = os.path.join(tdir, "VERSION.tmp")
         with open(tmp, "w") as f:
             f.write(str(new_v))

@@ -321,6 +321,33 @@ def test_snapshot_stalled_writer_does_not_silently_lose_commit(
         assert json.load(f)["units"][-1]["path"] != unit_a["path"]
 
 
+def test_snapshot_stalled_writer_cannot_move_version_back(
+    spark, scat, monkeypatch
+):
+    """Writer A stalls between its manifest create and its VERSION flip;
+    meanwhile writer B reclaims A's v2 slot and commits v2 and v3. A must
+    refuse to flip (VERSION would fall back to 2 and lose v3)."""
+    monkeypatch.setattr(SnapshotParquetCatalog, "TORN_MANIFEST_GRACE_SEC", 0)
+
+    def row(k):
+        return spark.createDataFrame([(k, 1)], "k string, v int")
+
+    scat.overwrite("t", row("a"))
+    writer_a = SnapshotParquetCatalog(spark, scat.root)
+
+    def stall(point, table, version):
+        assert (point, table, version) == ("manifest_written", "t", 2)
+        scat.append("t", row("B2"))  # reclaims A's v2 manifest
+        scat.append("t", row("B3"))
+
+    writer_a.pause_hook = stall
+    with pytest.raises(ConcurrentWriteError):
+        writer_a.append("t", row("A"))
+    assert scat._version("t") == 3
+    assert {r["k"] for r in scat.read("t", version=2).collect()} == {"a", "B2"}
+    assert {r["k"] for r in scat.read("t").collect()} == {"a", "B2", "B3"}
+
+
 def test_snapshot_merge_atomic_and_idempotent(spark, scat):
     df = spark.createDataFrame([("r", "a", 1)], "run_id string, k string, v int")
     scat.append("results", df)

@@ -218,3 +218,130 @@ def test_curate_resumable_kill_and_resume(spark, tmp_path):
         df, bench, store2, "run1", "part", cand, **kw2
     )
     assert st5.pending_before == 0 and out5.count() == 0
+
+
+def _fused_collects(monkeypatch):
+    """Record every collected frame that carries the fused report
+    aggregate (its ``__passed`` counter)."""
+    from pyspark.sql.classic.dataframe import DataFrame as ClassicDF
+
+    seen = []
+    real = ClassicDF.collect
+
+    def spy(frame):
+        if "__passed" in frame.columns:
+            seen.append(frame)
+        return real(frame)
+
+    monkeypatch.setattr(ClassicDF, "collect", spy)
+    return seen
+
+
+def _assert_same_report(got, want):
+    for f in ("total_records", "passed", "failed", "total_violation_rows"):
+        assert getattr(got, f) == getattr(want, f), f
+    assert got.pass_rate == want.pass_rate
+    assert got.errors_summary == want.errors_summary
+    assert got.sample_errors == want.sample_errors
+    assert got.quality.passed == want.quality.passed
+    assert got.quality.quality_score == want.quality.quality_score
+    assert len(got.quality.errors) == len(want.quality.errors)
+    for g, w in zip(got.quality.errors, want.quality.errors):
+        assert (g.rule_type, g.severity, g.message) == (
+            w.rule_type, w.severity, w.message
+        )
+        assert g.details.keys() == w.details.keys()
+        for k, v in w.details.items():
+            if isinstance(v, float):
+                # observed and shuffled partial merges may differ in the
+                # last ulp
+                assert g.details[k] == pytest.approx(v, rel=1e-9), k
+            else:
+                assert g.details[k] == v, k
+
+
+@pytest.fixture()
+def flagship(spark):
+    """A transcripts sample under the flagship contract, with a drift
+    baseline from a differently shaped sample (PSI floats in the report)
+    and a table-backed tool vocabulary."""
+    from data_contract_engine_spark.fixtures.transcripts import (
+        FLAGSHIP_CONTRACT_YAML,
+        transcripts_df,
+    )
+    from data_contract_engine_spark.operators.drift import baseline_snapshot
+    from data_contract_engine_spark.operators.referential import vocab_df
+
+    yaml_text = FLAGSHIP_CONTRACT_YAML.replace(
+        "    tool:\n      values: [search, browser, python, sql]\n",
+        "    tool:\n      table: tools\n      column: tool\n",
+    )
+    contract = parse_contract_yaml(yaml_text, name="flagship-obs")
+    df = transcripts_df(spark, n_convs=40, seed=11, hot_turns=30).withColumn(
+        "bucket", F.pmod(F.xxhash64("conv_id", "turn_idx"), F.lit(4))
+    )
+    base = transcripts_df(spark, n_convs=40, seed=5, hot_conv_pct=50.0)
+    snap = baseline_snapshot(
+        base, {c: s.get("expr") or c for c, s in contract.quality.drift.items()}
+    )
+    eng = ContractEngine(
+        spark,
+        drift_baseline_snapshot=snap,
+        vocab_tables={"tools": vocab_df(
+            spark, ["search", "browser", "python", "sql"], "tool")},
+        now_epoch=1767225600.0,  # 2026-01-01
+    )
+    return eng, contract, df
+
+
+def test_resumable_report_reuses_observed_aggregate(
+    spark, flagship, tmp_path, monkeypatch
+):
+    """After validate_resumable(violations_out=...), report() takes the
+    fused aggregate from the violations write and runs no aggregate job of
+    its own; the report equals a fresh validate().report() on the same
+    rows."""
+    eng, contract, df = flagship
+    keys = ["conv_id", "turn_idx"]
+    store = CheckpointStore(spark, str(tmp_path / "ck"))
+    vout = str(tmp_path / "viol")
+    validate_resumable(
+        eng, df.filter(F.col("bucket") < 2), contract, store, run_id="r",
+        partition_col="bucket", key_columns=keys, violations_out=vout,
+    )
+    res = validate_resumable(
+        eng, df, contract, store, run_id="r", partition_col="bucket",
+        key_columns=keys, violations_out=vout,
+    )
+    assert res.skipped == 2 and res.validated_now == 2
+
+    seen = _fused_collects(monkeypatch)
+    got = res.run.report()
+    assert seen == [], "report() re-ran the fused aggregate"
+    want = eng.validate(res.run.df, contract, key_columns=keys).report()
+    assert len(seen) == 1  # the fresh run's own aggregate pass
+    monkeypatch.undo()
+
+    assert got.failed > 0 and got.sample_errors
+    assert {e.rule_type for e in got.quality.errors} >= {
+        "UNIQUENESS", "REFERENTIAL", "DRIFT",
+    }
+    _assert_same_report(got, want)
+    written = spark.read.parquet(vout).filter(F.col("bucket") >= 2).count()
+    assert written == got.total_violation_rows
+
+
+def test_failed_violations_write_leaves_report_working(spark, flagship, tmp_path):
+    """A violations write that raises never ran the observed plan:
+    report() must fall back to its own aggregate instead of waiting on the
+    observation."""
+    from pyspark.errors import AnalysisException
+
+    eng, contract, df = flagship
+    keys = ["conv_id", "turn_idx"]
+    run = eng.validate(df, contract, key_columns=keys)
+    with pytest.raises(AnalysisException):
+        run.write_violations(str(tmp_path / "viol"), ["no_such_column"])
+    _assert_same_report(
+        run.report(), eng.validate(df, contract, key_columns=keys).report()
+    )

@@ -523,3 +523,101 @@ def test_multi_uniqueness_duplicate_key_specs(spark):
     (n_single, _), = single.values()
     for n, _top in doubled.values():
         assert n == n_single == 1
+
+
+def test_compile_cache_reuses_column_trees(spark, monkeypatch):
+    """A second validate() of the same contract and schema builds no
+    Column trees; a different schema, contract or CompileOptions does."""
+    from data_contract_engine_spark import engine as engine_mod
+    from data_contract_engine_spark.compiler.expressions import CompileOptions
+
+    calls = []
+    real = engine_mod.compile_contract
+
+    def counting(*a, **k):
+        calls.append(a[0].name)
+        return real(*a, **k)
+
+    monkeypatch.setattr(engine_mod, "compile_contract", counting)
+    ddl = "id string, value double, timestamp timestamp"
+    rows = [("a", 1.0, _ts(1)), ("b", None, _ts(2))]
+    df = spark.createDataFrame(rows, ddl)
+    quality = {"completeness": {"min_row_count": 1},
+               "statistics": {"value": {"mean": {"max": 10}}}}
+    contract = _contract(quality)
+    eng = ContractEngine(spark, now_epoch=NOW)
+
+    rep1 = eng.validate(df, contract, key_columns=["id"]).report()
+    assert len(calls) == 1
+    rep2 = eng.validate(
+        spark.createDataFrame(rows, ddl), _contract(quality), key_columns=["id"]
+    ).report()
+    assert len(calls) == 1, "same contract + schema must not recompile"
+    assert (rep2.total_records, rep2.passed) == (rep1.total_records, rep1.passed)
+
+    # a different schema: value as string
+    other = spark.createDataFrame(
+        [("a", "1", _ts(1))], "id string, value string, timestamp timestamp"
+    )
+    eng.validate(other, contract, key_columns=["id"])
+    assert len(calls) == 2
+    # a different contract
+    eng.validate(df, _contract({"completeness": {"min_row_count": 5}}))
+    assert len(calls) == 3
+    # different compile options
+    eng.compile_options = CompileOptions(max_errors=3)
+    eng.validate(df, contract, key_columns=["id"])
+    assert len(calls) == 4
+    # each of them is now cached too
+    eng.validate(df, contract, key_columns=["id"])
+    eng.compile_options = CompileOptions()
+    eng.validate(other, contract, key_columns=["id"])
+    eng.validate(df, contract, key_columns=["id"])
+    assert len(calls) == 4
+
+
+def test_drift_baseline_dataframe_snapshotted_once_per_engine(
+    spark, monkeypatch
+):
+    """An engine given a baseline DataFrame computes its drift snapshot
+    (edges + histogram jobs) on the first report only; a new run of the
+    same engine reuses it."""
+    from data_contract_engine_spark.operators import drift as drift_op
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    real = drift_op.baseline_snapshot
+
+    def in_own_group(*a, **k):
+        sc.setJobGroup("dce-test-snapshot", "drift baseline snapshot")
+        try:
+            return real(*a, **k)
+        finally:
+            sc.setJobGroup("dce-test-report", "report")
+
+    monkeypatch.setattr(drift_op, "baseline_snapshot", in_own_group)
+    ddl = "id string, value double, timestamp timestamp"
+    base = spark.createDataFrame(
+        [(str(i), float(i % 7), _ts(1)) for i in range(40)], ddl
+    )
+    cur = spark.createDataFrame(
+        [(str(i), float(i % 3), _ts(1)) for i in range(40)], ddl
+    )
+    contract = _contract(
+        {"drift": {"value": {"metric": "psi", "threshold": 0.1, "bins": 4}}}
+    )
+    eng = ContractEngine(spark, now_epoch=NOW, drift_baseline=base)
+    sc.setJobGroup("dce-test-report", "report")
+    try:
+        rep1 = eng.validate(cur, contract, key_columns=["id"]).report()
+        first = len(tracker.getJobIdsForGroup("dce-test-snapshot"))
+        rep2 = eng.validate(cur, contract, key_columns=["id"]).report()
+        second = len(tracker.getJobIdsForGroup("dce-test-snapshot"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert first >= 2  # edges + histogram
+    assert second == first, "second report re-ran the baseline snapshot"
+    drift1 = [e.details for e in rep1.quality.errors if e.rule_type == "DRIFT"]
+    drift2 = [e.details for e in rep2.quality.errors if e.rule_type == "DRIFT"]
+    assert drift1 and drift1 == drift2
