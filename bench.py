@@ -56,16 +56,12 @@ def _numbers_only(d: dict) -> dict:
 def summary(full: dict) -> str:
     """The machine-parsed last stdout line for the full result ``full``:
     headline value, steady per-query walls, throughput and scaling
-    evidence (without its notes). Keys are dropped from the end of
-    SUMMARY_KEYS until the line is at most SUMMARY_MAX_CHARS long."""
+    evidence (without its notes). tests/test_bench_summary.py holds it
+    to SUMMARY_MAX_CHARS characters."""
     out = {k: full[k] for k in SUMMARY_KEYS if k in full}
     if "scaling_evidence" in out:
         out["scaling_evidence"] = _numbers_only(out["scaling_evidence"])
-    line = json.dumps(out, separators=(",", ":"))
-    while len(line) > SUMMARY_MAX_CHARS:
-        out.popitem()
-        line = json.dumps(out, separators=(",", ":"))
-    return line
+    return json.dumps(out, separators=(",", ":"))
 
 
 def timed(fn):

@@ -84,9 +84,10 @@ class ValidationRun:
     _report: Optional[BatchReport] = None
     # drift key -> fused agg exprs; shared with the engine's compile cache
     _aggs: Dict[str, List[Column]] = dc_field(default_factory=dict)
-    # set by write_violations once its write returned: report() reads
-    # the fused aggregate from it instead of scanning again
-    _observation: Optional[Observation] = None
+    # set by write_violations once its write returned: (Observation,
+    # (drift_edges, drift_cats, base_bins) the observed columns were built
+    # on); report() decodes the fused row from it instead of scanning again
+    _observation: Optional[tuple] = None
 
     def _failed_with_errors(self) -> DataFrame:
         """Failed rows with the full error-struct array.
@@ -255,10 +256,11 @@ class ValidationRun:
         if self._report is not None:
             return self._report
         t0 = time.time()
-        exprs, drift_edges, drift_cats, base_bins = self._fused()
         if self._observation is not None:
-            agg_row = dict(self._observation.get)
+            obs, (drift_edges, drift_cats, base_bins) = self._observation
+            agg_row = dict(obs.get)
         else:
+            exprs, drift_edges, drift_cats, base_bins = self._fused()
             # run over the validated frame (it carries the source columns)
             agg_row = self.validated.agg(*exprs).collect()[0].asDict()
         self._report = self._finish_report(
@@ -275,16 +277,20 @@ class ValidationRun:
         """Write :meth:`violations` to ``path`` while the SAME scan
         collects the fused report aggregate via ``DataFrame.observe``, so
         a later :meth:`report` runs no aggregate pass of its own."""
+        exprs, *drift = self._fused()
         obs = Observation(f"contract:{self.contract.name}")
         observed = dataclasses.replace(
-            self, validated=self.validated.observe(obs, *self._fused()[0])
+            self, validated=self.validated.observe(obs, *exprs)
         )
         sinks.write_violations(
             observed.violations(extra_cols), path, partition_cols
         )
         # only after the write returned: a failed write never ran the
-        # observed plan, and obs.get would wait for it forever
-        self._observation = obs
+        # observed plan, and obs.get would wait for it forever. The drift
+        # state goes with it: the observed histogram columns are decoded
+        # with the edges they were built on, even if the engine's baseline
+        # is replaced before report()
+        self._observation = (obs, drift)
 
     def execute(
         self,
@@ -586,7 +592,9 @@ class ContractEngine:
         self.compile_options = compile_options or CompileOptions()
         # (repr(contract), schema json, repr(options)) -> _Compiled: the
         # Column trees cost thousands of Py4J round trips to build and are
-        # identical on every call, so they are built once per engine
+        # identical on every call, so they are built once per engine. Only
+        # a reused engine hits it: foreach_batch_validator's micro-batches,
+        # a resume on the same engine; the CLI validates once per engine
         self._compiled: Dict[tuple, _Compiled] = {}
         # repr(drift rules) -> (baseline DataFrame, its snapshot)
         self._snapshots: Dict[str, tuple] = {}

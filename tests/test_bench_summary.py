@@ -43,9 +43,3 @@ def test_summary_is_short_and_keeps_the_headline(bench):
     )
     assert "note" not in ev["asymptote"] and "source" not in ev
 
-
-def test_summary_drops_trailing_keys_to_fit(bench):
-    full = {"metric": "m", "value": 1.0, "unit": "sec", "sf": "0.1",
-            "queries": {f"q{i:04d}": 1.0 for i in range(200)}}
-    got = json.loads(bench.summary(full))
-    assert got == {"metric": "m", "value": 1.0, "unit": "sec"}

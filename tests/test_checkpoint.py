@@ -345,3 +345,23 @@ def test_failed_violations_write_leaves_report_working(spark, flagship, tmp_path
     _assert_same_report(
         run.report(), eng.validate(df, contract, key_columns=keys).report()
     )
+
+
+def test_observed_report_keeps_the_drift_state_it_was_built_on(
+    spark, flagship, tmp_path
+):
+    """Replacing the engine's drift baseline between write_violations and
+    report() must not decode the observed histograms with the new edges."""
+    from data_contract_engine_spark.operators.drift import baseline_snapshot
+
+    eng, contract, df = flagship
+    keys = ["conv_id", "turn_idx"]
+    run = eng.validate(df, contract, key_columns=keys)
+    run.write_violations(str(tmp_path / "viol"))
+    want = eng.validate(df, contract, key_columns=keys).report()
+
+    eng.drift_baseline_snapshot = baseline_snapshot(
+        df, {c: s.get("expr") or c for c, s in contract.quality.drift.items()},
+        bins=3,
+    )
+    _assert_same_report(run.report(), want)

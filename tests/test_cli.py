@@ -306,3 +306,47 @@ def test_validate_snapshot_checkpoint_backend(spark, tmp_path, capsys,
     assert out2["status"] == "ALREADY_DONE"
     # the checkpoint relation lives in the snapshot catalog's layout
     assert (tmp_path / "snap_ckpt" / "checkpoints" / "VERSION").exists()
+
+
+def test_validate_violations_out_partitioned_without_checkpoint(
+    spark, tmp_path, capsys, monkeypatch
+):
+    """Non-resumable --violations-out with a --partition-col that is not a
+    key column: the write carries the partition column and is partitioned
+    by it."""
+    from data_contract_engine_spark import ContractEngine, parse_contract_yaml
+    from data_contract_engine_spark.fixtures.transcripts import (
+        FLAGSHIP_CONTRACT_YAML,
+        transcripts_df,
+    )
+
+    monkeypatch.setenv("DCE_CLI_KEEP_SESSION", "1")
+    src = str(tmp_path / "transcripts.parquet")
+    transcripts_df(spark, n_convs=20, seed=3, hot_turns=30).write.parquet(src)
+    viol = tmp_path / "viol"
+    rc = cli.main([
+        "validate",
+        "--input", src,
+        "--contract-template", "flagship",
+        "--run-id", "plain-partitioned",
+        "--key-columns", "turn_idx",
+        "--partition-col", "conv_id",
+        "--violations-out", str(viol),
+    ])
+    assert rc == 0
+    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    assert out["failed"] > 0
+
+    df = spark.read.parquet(src)
+    want = ContractEngine(spark).validate(
+        df, parse_contract_yaml(FLAGSHIP_CONTRACT_YAML, name="flagship"),
+        key_columns=["turn_idx"],
+    ).violations(extra_cols=["conv_id"])
+    assert any(p.name.startswith("conv_id=") for p in viol.iterdir())
+    got = spark.read.parquet(str(viol))
+
+    def per_conv(v):
+        return sorted(v.groupBy("conv_id").count().collect())
+
+    assert per_conv(got) == per_conv(want)
+    assert got.count() == want.count() > 0

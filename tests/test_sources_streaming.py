@@ -169,6 +169,37 @@ def test_foreach_batch_runs_full_engine(spark, tmp_path):
     assert seen == {"total": 2, "failed": 1}
 
 
+
+def test_foreach_batch_builds_the_contract_once(spark, monkeypatch):
+    """Every micro-batch reuses one engine, so the contract's Column trees
+    and the report's fused aggregate are built for the first batch only."""
+    from data_contract_engine_spark import engine as engine_mod
+
+    built = []
+    real_compile = engine_mod.compile_contract
+    real_aggs = engine_mod.ValidationRun._agg_exprs
+
+    def compile_contract(*a, **k):
+        built.append("compile")
+        return real_compile(*a, **k)
+
+    def agg_exprs(self, *a):
+        built.append("aggs")
+        return real_aggs(self, *a)
+
+    monkeypatch.setattr(engine_mod, "compile_contract", compile_contract)
+    monkeypatch.setattr(engine_mod.ValidationRun, "_agg_exprs", agg_exprs)
+    reports = []
+    handle = foreach_batch_validator(
+        ContractEngine(spark), parse_contract_yaml(CONTRACT, name="fb"),
+        lambda batch_id, run: reports.append(run.report()),
+    )
+    batches = [[("usr_1", 10), ("bad", 20)], [("usr_2", 200)]]
+    for batch_id, rows in enumerate(batches):
+        handle(spark.createDataFrame(rows, "user_id string, age int"), batch_id)
+    assert built == ["compile", "aggs"]
+    assert [(r.total_records, r.failed) for r in reports] == [(2, 1), (1, 1)]
+
 def test_stateful_conversation_progress(spark, tmp_path):
     """applyInPandasWithState carries per-conversation state across
     micro-batches: the second batch fills the gap left by the first and
