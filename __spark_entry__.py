@@ -146,7 +146,7 @@ def q_partition_verdicts(spark, sf_dir):
 
 def q_uniqueness(spark, sf_dir):
     tr = _transcripts(spark, sf_dir)
-    return uniq_op.duplicate_counts(tr, ["conv_id", "turn_idx"], salted=True).select(
+    return uniq_op.duplicate_counts(tr, ["conv_id", "turn_idx"]).select(
         "conv_id", F.col("turn_idx").cast("int").alias("turn_idx"), "dup_count"
     )
 
@@ -429,12 +429,8 @@ def _query_vec(spark, sf_dir):
 def q_knn_cosine(spark, sf_dir):
     e = _read(spark, sf_dir, "embeddings")
     qv = _query_vec(spark, sf_dir)
-    scored = e.select(
-        "vec_id",
-        F.round(
-            similarity.cosine(F.col("embedding"), similarity._lit_vec(qv)), 6
-        ).alias("sim"),
-    )
+    sim = similarity.query_cosine_pandas(qv)(F.col("embedding"))
+    scored = e.select("vec_id", F.round(sim, 6).alias("sim"))
     return scored.orderBy(F.desc("sim"), F.col("vec_id")).limit(10)
 
 

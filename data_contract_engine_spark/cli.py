@@ -232,7 +232,6 @@ def cmd_stream_dedup(args) -> int:
         text_col=args.text_col,
         bands=args.bands,
         num_hashes=args.num_hashes,
-        timeout=args.state_timeout,
     )
     q = (
         pairs.writeStream.format("parquet")
@@ -500,8 +499,6 @@ def build_parser() -> argparse.ArgumentParser:
     sd.add_argument("--num-hashes", type=int, default=32)
     sd.add_argument("--bands", type=int, default=8)
     sd.add_argument("--max-files-per-trigger", type=int, default=16)
-    sd.add_argument("--state-timeout", default="NoTimeout",
-                    choices=("NoTimeout", "ProcessingTimeTimeout"))
     sd.add_argument("--out", required=True)
     sd.add_argument("--checkpoint", required=True)
     sd.set_defaults(fn=cmd_stream_dedup)

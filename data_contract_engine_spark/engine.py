@@ -394,17 +394,13 @@ class ValidationRun:
         if not rules.uniqueness:
             return []
         keys = rules.uniqueness.get("fields", [])
-        if len(keys) > 1 and not self.engine.salted_aggregates:
-            # all keys in ONE job via GROUPING SETS (one fact scan); the
-            # explicit-salt variant keeps the per-key loop (its two-stage
-            # plan doesn't compose with grouping sets)
+        if len(keys) > 1:
+            # all keys in ONE job via GROUPING SETS (one fact scan)
             reports = uniq_op.multi_duplicate_reports(self.df, keys)
         else:
             reports = {
                 (k if isinstance(k, str) else ",".join(k)):
-                uniq_op.duplicate_report(
-                    self.df, k, salted=self.engine.salted_aggregates
-                )
+                uniq_op.duplicate_report(self.df, k)
                 for k in keys
             }
         out: List[QualityError] = []
@@ -430,8 +426,7 @@ class ValidationRun:
             return None
         frames = [
             uniq_op.duplicate_violations(
-                self.df, key, self.contract.name,
-                salted=self.engine.salted_aggregates,
+                self.df, key, self.contract.name
             ).select(
                 "contract_id", "rule", "field",
                 F.concat_ws(
@@ -561,10 +556,6 @@ class ContractEngine:
     """Facade: ``ContractEngine(spark).validate(df, contract_yaml)``.
 
     Options:
-      * ``salted_aggregates``: run uniqueness with an EXPLICIT salt stage.
-        Default False: Spark's hash-aggregate partial combine already
-        salts count-style aggs by input partition (see
-        operators/uniqueness.py measurement note);
       * ``vocab_tables``: name → DataFrame registry for referential rules;
       * ``drift_baseline``: baseline DataFrame for drift rules;
       * ``now_epoch``: freeze "now" for deterministic freshness tests;
@@ -574,7 +565,6 @@ class ContractEngine:
     def __init__(
         self,
         spark: SparkSession,
-        salted_aggregates: bool = False,
         vocab_tables: Optional[Dict[str, DataFrame]] = None,
         drift_baseline: Optional[DataFrame] = None,
         drift_baseline_snapshot: Optional[Dict[str, Dict[str, list]]] = None,
@@ -582,7 +572,6 @@ class ContractEngine:
         compile_options: Optional[CompileOptions] = None,
     ):
         self.spark = spark
-        self.salted_aggregates = salted_aggregates
         self.vocab_tables = vocab_tables or {}
         self.drift_baseline = drift_baseline
         # {col: {"edges": [...], "counts": [...]}} from

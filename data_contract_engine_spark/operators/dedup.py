@@ -27,7 +27,7 @@ scale by partitioning:
 
 from __future__ import annotations
 
-from typing import List, Optional, Sequence
+from typing import List, Optional, Tuple
 
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
@@ -768,6 +768,71 @@ def duplicate_clusters(
     )
 
 
+def _cosine_pairs(
+    vecs: DataFrame,
+    group: List[str],
+    threshold: float,
+    dim: int,
+    lsh: Optional[Tuple[int, int, int]],
+) -> DataFrame:
+    """(id_a, id_b, cosine, *group) for every id_a < id_b of the same
+    ``group`` with cosine ≥ threshold, over ``vecs`` = (id, v, *group).
+
+    ``lsh`` = (planes, bands, seed) draws the candidates from banded
+    hyperplane LSH keyed on (*group, band, bucket); multi-band collisions
+    dedup on BARE id pairs and each side's vector joins back once
+    (shuffling two wide arrays per duplicate candidate through the
+    distinct would move ~bands× more data). ``lsh=None`` pairs everything
+    within the group. Every candidate is verified by the fold-exact dot
+    over per-vector norms (computing the norms per pair redid the fold
+    twice per candidate), so every returned pair is exact."""
+    from .similarity import band_buckets_pandas, pair_dot_pandas
+
+    dot_udf = pair_dot_pandas(dim)
+    vecs_n = vecs.select(
+        "id", "v", *group, F.sqrt(dot_udf(F.col("v"), F.col("v"))).alias("nrm")
+    )
+
+    def side(s: str, *extra: str) -> DataFrame:
+        return vecs_n.select(
+            F.col("id").alias(f"id_{s}"),
+            F.col("v").alias(f"v{s}"),
+            F.col("nrm").alias(f"n{s}"),
+            *extra,
+        )
+
+    if lsh is None:
+        joined = side("a", *group).join(side("b", *group), group).filter(
+            F.col("id_a") < F.col("id_b")
+        )
+    else:
+        planes, bands, seed = lsh
+        buckets_udf = band_buckets_pandas(
+            planes=planes, bands=bands, seed=seed, dim=dim
+        )
+        keys = [*group, "band", "bucket"]
+        with_b = vecs.select(
+            "id", *group,
+            F.posexplode(buckets_udf(F.col("v"))).alias("band", "bucket"),
+        )
+        pairs = (
+            with_b.select(F.col("id").alias("id_a"), *keys)
+            .join(with_b.select(F.col("id").alias("id_b"), *keys), keys)
+            .filter(F.col("id_a") < F.col("id_b"))
+            .select(*group, "id_a", "id_b")
+            .distinct()
+        )
+        joined = pairs.join(side("a"), "id_a").join(side("b"), "id_b")
+    return joined.select(
+        "id_a",
+        "id_b",
+        (
+            dot_udf(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
+        ).alias("cosine"),
+        *group,
+    ).filter(F.col("cosine") >= threshold)
+
+
 def embedding_near_duplicates(
     emb_df: DataFrame,
     id_col: str = "vec_id",
@@ -778,21 +843,19 @@ def embedding_near_duplicates(
     seed: int = 42,
     dim: Optional[int] = None,
 ) -> DataFrame:
-    """Embedding-cosine near-dup pairs ≥ threshold via BANDED
-    random-hyperplane LSH (OR-construction, like MinHash banding):
-    candidates share at least one band's full sign pattern; exact cosine
-    is verified on candidates only, so every returned pair is exact —
-    banding affects recall, never precision.
+    """Embedding-cosine near-dup pairs (id_a, id_b, cosine) ≥ threshold
+    via BANDED random-hyperplane LSH (OR-construction, like MinHash
+    banding): candidates share at least one band's full sign pattern;
+    exact cosine is verified on candidates only, so every returned pair
+    is exact — banding affects recall, never precision.
 
-    ``dim`` is required: a plane set of the wrong width would null-pad
-    the dot products and silently send every vector to one bucket
-    (degrading to O(n²)), so the plane width must match the vector
+    ``dim`` is required: a plane set of the wrong width would bucket on a
+    prefix of each vector, so the plane width must match the vector
     width — and Spark schemas carry no fixed array length, so inferring
     it would cost a driver-side job during plan construction.
 
     Scale shape: one Arrow-batched projection computes all band ids
-    (fold-exact — bit-identical to the Column-HOF form, see
-    ``similarity.band_buckets_pandas``); the candidate join shuffles
+    (``similarity.band_buckets_pandas``); the candidate join shuffles
     only (band, bucket) keys; same-bucket groups ≈ near-dup cluster
     size. No cartesian product anywhere. Defaults are 16 bands of 12
     bits (planes=192; was 4 bands of 4 bits through round 4): at
@@ -801,66 +864,16 @@ def embedding_near_duplicates(
     make same-bucket groups 256× finer — the round-4 4-bit bands put
     1/16th of a dense region in EVERY bucket, and candidate volume
     (not verification cost) is what goes quadratic on a hot region
-    (measured 30M → 0.8M candidates on the hot-cluster bench input). Verification is the Arrow fold-exact dot
-    over per-id precomputed norms (norms are per-vector, not per-pair —
-    computing them inside the pair projection redid the fold twice per
-    candidate). Vectors must be non-null.
+    (measured 30M → 0.8M candidates on the hot-cluster bench input).
+    Vectors must be non-null.
     """
-    from .similarity import band_buckets_pandas, pair_dot_pandas
-
     if dim is None:
         raise ValueError(
             "embedding_near_duplicates requires dim= "
             "(the embedding dimensionality)"
         )
-    buckets_udf = band_buckets_pandas(
-        planes=planes, bands=bands, seed=seed, dim=dim
-    )
-    dot_udf = pair_dot_pandas(dim)
-    with_b = emb_df.select(
-        F.col(id_col).alias("id"),
-        F.posexplode(buckets_udf(F.col(vec_col))).alias("band", "bucket"),
-    )
-    a = with_b.select(F.col("id").alias("id_a"), "band", "bucket")
-    b = with_b.select(F.col("id").alias("id_b"), "band", "bucket")
-    # dedup multi-band collisions on BARE id pairs, then join each side's
-    # vector back exactly once — shuffling two wide arrays per duplicate
-    # candidate through the distinct would move ~bands× more data
-    pairs = (
-        a.join(b, ["band", "bucket"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
-    vecs = emb_df.select(
-        F.col(id_col).alias("id"),
-        F.col(vec_col).alias("v"),
-        F.sqrt(dot_udf(F.col(vec_col), F.col(vec_col))).alias("nrm"),
-    )
-    joined = (
-        pairs.join(
-            vecs.select(
-                F.col("id").alias("id_a"),
-                F.col("v").alias("va"),
-                F.col("nrm").alias("na"),
-            ),
-            "id_a",
-        ).join(
-            vecs.select(
-                F.col("id").alias("id_b"),
-                F.col("v").alias("vb"),
-                F.col("nrm").alias("nb"),
-            ),
-            "id_b",
-        )
-    )
-    return joined.select(
-        "id_a",
-        "id_b",
-        (
-            dot_udf(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
-        ).alias("cosine"),
-    ).filter(F.col("cosine") >= threshold)
+    vecs = emb_df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("v"))
+    return _cosine_pairs(vecs, [], threshold, dim, (planes, bands, seed))
 
 
 def semantic_dedup_pairs(
@@ -885,13 +898,11 @@ def semantic_dedup_pairs(
     (list_id, band, bucket), so a bucket collision across clusters never
     produces a candidate, and the per-key group size stays ≈ near-dup
     cluster size. Exact cosine verifies every candidate (precision 1.0;
-    banding bounds recall, like every LSH path in this module). Defaults
-    are 16×12-bit bands (recall ~0.995 at 0.95 vs ~0.985 for the old
-    4×4, 256× finer buckets) with Arrow fold-exact verification — see
-    :func:`embedding_near_duplicates` for the candidate-volume math; a
-    hot CLUSTER concentrates everything onto one list_id, so bucket
-    granularity is the only thing standing between that and a quadratic
-    verify.
+    banding bounds recall, like every LSH path in this module) — see
+    :func:`embedding_near_duplicates` for the band defaults and the
+    candidate-volume math; a hot CLUSTER concentrates everything onto
+    one list_id, so bucket granularity is the only thing standing
+    between that and a quadratic verify.
 
     ``exact=True`` replaces LSH with the within-cluster all-pairs join —
     O(cluster²) per cluster, the literal SemDeDup formulation and the
@@ -899,76 +910,24 @@ def semantic_dedup_pairs(
     bounded (n_lists sized so corpus/n_lists² pairs are affordable); a
     pathologically hot cluster makes this quadratic, which is exactly
     what the LSH default avoids.
-    """
-    from .similarity import band_buckets_pandas, cosine, pair_dot_pandas
 
+    ``dim`` (the embedding dimensionality) is required on both paths:
+    Spark schemas carry no fixed array length, and inferring it via
+    .first() would run a driver-side job during plan construction;
+    :func:`semantic_dedup` derives it from the centroids for free.
+    """
+    if dim is None:
+        raise ValueError(
+            "semantic_dedup_pairs requires dim= "
+            "(the embedding dimensionality)"
+        )
     vecs = assigned.select(
         F.col(id_col).alias("id"), F.col(vec_col).alias("v"), "list_id"
     )
-    if exact:
-        a = vecs.select(
-            F.col("id").alias("id_a"), F.col("v").alias("va"), "list_id"
-        )
-        b = vecs.select(
-            F.col("id").alias("id_b"), F.col("v").alias("vb"), "list_id"
-        )
-        joined = a.join(b, "list_id").filter(F.col("id_a") < F.col("id_b"))
-        return joined.select(
-            "id_a", "id_b",
-            cosine(F.col("va"), F.col("vb")).alias("cosine"),
-            "list_id",
-        ).filter(F.col("cosine") >= threshold)
-    if dim is None:
-        # Spark schemas carry no fixed array length, and inferring via
-        # .first() would run a driver-side job during plan construction
-        # (non-lazy, one job per call). Require it instead;
-        # semantic_dedup derives it from the centroids for free.
-        raise ValueError(
-            "semantic_dedup_pairs requires dim= for the LSH path "
-            "(pass the embedding dimensionality, or use exact=True)"
-        )
-    buckets_udf = band_buckets_pandas(
-        planes=planes, bands=bands, seed=seed, dim=dim
+    return _cosine_pairs(
+        vecs, ["list_id"], threshold, dim,
+        None if exact else (planes, bands, seed),
     )
-    dot_udf = pair_dot_pandas(dim)
-    with_b = vecs.select(
-        "id", "list_id",
-        F.posexplode(buckets_udf(F.col("v"))).alias("band", "bucket"),
-    )
-    a = with_b.select(F.col("id").alias("id_a"), "list_id", "band", "bucket")
-    b = with_b.select(F.col("id").alias("id_b"), "list_id", "band", "bucket")
-    pairs = (
-        a.join(b, ["list_id", "band", "bucket"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("list_id", "id_a", "id_b")
-        .distinct()
-    )
-    vecs_n = vecs.select(
-        "id", "v", F.sqrt(dot_udf(F.col("v"), F.col("v"))).alias("nrm")
-    )
-    joined = pairs.join(
-        vecs_n.select(
-            F.col("id").alias("id_a"),
-            F.col("v").alias("va"),
-            F.col("nrm").alias("na"),
-        ),
-        "id_a",
-    ).join(
-        vecs_n.select(
-            F.col("id").alias("id_b"),
-            F.col("v").alias("vb"),
-            F.col("nrm").alias("nb"),
-        ),
-        "id_b",
-    )
-    return joined.select(
-        "id_a",
-        "id_b",
-        (
-            dot_udf(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
-        ).alias("cosine"),
-        "list_id",
-    ).filter(F.col("cosine") >= threshold)
 
 
 def semantic_dedup(

@@ -1,22 +1,21 @@
 """Similarity search over embedding columns (array<float>).
 
-Brute-force cosine top-k as the exact baseline, and a random-hyperplane
-LSH-bucketed variant as the scale path. Since round 5 the single-query
-scorers and bucket projections run as Arrow-batched numpy with
-FOLD-EXACT numerics (bit-identical to the Column-HOF forms — see the
-block comment above ``pair_dot_pandas``); the `F.zip_with` /
-`F.aggregate` higher-order forms remain for composition sites where
-per-row volume is small (multi-query crossJoin scoring, argmax
-assignment), since HOF lambdas are JVM-interpreted, never
-whole-stage-codegen'd.
+Brute-force cosine top-k as the exact baseline, and random-hyperplane
+LSH and IVF variants as the scale paths. All vector math runs as
+Arrow-batched numpy with FOLD-EXACT numerics (see the block comment
+above :func:`_fold`), bit-identical to the sequential fold the SQL
+oracles replay. The Column higher-order-function forms of the same math
+are the reference the kernels are pinned against
+(``tests/oracle_ref.py``).
 
 Scale notes:
-* brute-force single query: the query vector ships as a literal array —
-  a pure map over the table, no shuffle, then a top-k reduce
+* brute-force single query: the query vector ships inside the UDF
+  closure — a pure map over the table, no shuffle, then a top-k reduce
   (``orderBy().limit(k)`` → Spark's TakeOrderedAndProject, which keeps
   only k rows per partition).
-* multi-query: broadcast the (small) query set and crossJoin — each
-  partition scores locally; per-query top-k via window over query id.
+* multi-query: the (small) query set ships the same way; each Arrow
+  batch scores every query and keeps only its own top-k per query, so
+  the final rank window sees ≤ k·batches rows per query.
 * LSH: bucket by sign-bits against deterministic hyperplanes; same-bucket
   scan shrinks the scored set ~2^planes-fold at some recall cost (probe
   neighboring buckets to recover recall).
@@ -24,48 +23,22 @@ Scale notes:
 
 from __future__ import annotations
 
-import math
-from typing import List, Optional, Sequence
+from typing import List, Sequence
 
+import numpy as np
 import pandas as pd
 
-from pyspark.sql import Column, DataFrame, Window, functions as F
-
-
-def _lit_vec(vec: Sequence[float]) -> Column:
-    return F.array(*[F.lit(float(x)) for x in vec])
-
-
-def dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def norm(a: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            F.transform(a, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
-
-
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))
+from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql.functions import pandas_udf
 
 
 # --------------------------------------------------------------------------
-# Arrow-vectorized variants with FOLD-EXACT numerics
+# FOLD-EXACT Arrow kernels
 #
-# The higher-order-function forms above never enter WholeStageCodegen —
-# Spark evaluates aggregate/zip_with/transform lambdas interpreted, per
-# row (~130 ns per fused multiply-add). On per-ROW projections that is
-# tolerable; on per-PAIR verify relations (LSH candidates — potentially
-# orders of magnitude more rows than the table) the interpretation
+# Spark evaluates higher-order-function lambdas (aggregate/zip_with/
+# transform) interpreted, per row, never inside WholeStageCodegen (~130 ns
+# per fused multiply-add). On per-PAIR verify relations (LSH candidates —
+# potentially orders of magnitude more rows than the table) that
 # dominated the stage: the semantic-dedup hot-cluster bench twin spent
 # ~50 s of its 72 s wall in HOF cosine over ~30M candidates. Unrolling
 # the fold into plain Column expressions does NOT fix it: at dim 64 the
@@ -74,102 +47,105 @@ def cosine(a: Column, b: Column) -> Column:
 # Spark falls back to interpreted eval, and a 4096-node interpreted tree
 # is ~3× SLOWER than the HOF loop (measured).
 #
-# So the hot paths use Arrow-batched pandas UDFs — the same standard
-# production shape as this repo's BPE/media operators — with one crucial
-# property: the numpy code VECTORIZES OVER ROWS but FOLDS SEQUENTIALLY
-# OVER DIMENSIONS (``acc = acc + A[:, i] * B[:, i]`` starting from 0.0),
-# so every scalar result is produced by the exact IEEE op sequence of
-# the HOF fold above. No np.dot/matmul (those reassociate/pairwise-sum
-# and drift in the last ulp) — the SQL-oracle replays (DuckDB
-# list_reduce, also a sequential fold) stay hash-identical.
+# So every vector operator uses Arrow-batched pandas UDFs with one
+# crucial property: the numpy code VECTORIZES OVER ROWS but FOLDS
+# SEQUENTIALLY OVER DIMENSIONS (``acc = acc + A[:, i] * B[:, i]`` starting
+# from 0.0), so every scalar result is produced by the exact IEEE op
+# sequence of the HOF fold. No np.dot/matmul (those reassociate or
+# pairwise-sum and drift in the last ulp) — the SQL-oracle replays
+# (DuckDB list_reduce, also a sequential fold) stay hash-identical.
 # --------------------------------------------------------------------------
 
 
-def _stack_vectors(v: pd.Series, fn: str):
+def _stack_vectors(v: pd.Series, fn: str, dim: int) -> np.ndarray:
     """One Arrow batch of an array column as a rows×dim float64 matrix.
-    A null vector raises a named error here (``np.stack`` would fail on
-    it with an opaque shape error)."""
-    import numpy as np
-
+    A null vector, or one whose width is not ``dim``, raises a named
+    ``ValueError``: ``np.stack`` would fail on either with an opaque
+    shape error, and a uniformly wider batch would fold only its first
+    ``dim`` elements and return a wrong score."""
     if v.isna().any():
         raise ValueError(f"{fn}: null embedding vector")
-    return np.stack(v.to_numpy()).astype("float64", copy=False)
+    if len(v) == 0:
+        return np.zeros((0, dim))
+    try:
+        M = np.stack(v.to_numpy()).astype("float64", copy=False)
+    except ValueError:
+        raise ValueError(
+            f"{fn}: expected vectors of width {dim}, got mixed widths"
+        ) from None
+    if M.shape[1] != dim:
+        raise ValueError(
+            f"{fn}: expected vectors of width {dim}, got {M.shape[1]}"
+        )
+    return M
+
+
+def _fold(M: np.ndarray, Q: np.ndarray) -> np.ndarray:
+    """``M @ Q`` (rows×dim by dim×k) folded sequentially over dims."""
+    acc = np.zeros((M.shape[0], Q.shape[1]))
+    for i in range(M.shape[1]):
+        acc = acc + M[:, i : i + 1] * Q[i : i + 1, :]
+    return acc
+
+
+def _fold_rows(A: np.ndarray, B: np.ndarray) -> np.ndarray:
+    """Row-wise dot products of two rows×dim matrices, folded over dims."""
+    acc = np.zeros(A.shape[0])
+    for i in range(A.shape[1]):
+        acc = acc + A[:, i] * B[:, i]
+    return acc
+
+
+def _query_matrix(vectors: Sequence[Sequence[float]], fn: str, what: str):
+    """Driver-side query (or centroid) vectors as a dim×k float64 matrix
+    and their norms. A zero-norm vector raises: every cosine against it
+    divides by zero, which the Column form raises as DIVIDE_BY_ZERO under
+    ANSI mode (the session default)."""
+    Q = np.array(vectors, dtype="float64")
+    qn = np.sqrt(_fold_rows(Q, Q))
+    if not qn.all():
+        raise ValueError(f"{fn}: zero-norm {what} vector")
+    return Q.T, qn
+
+
+def _cosines(M: np.ndarray, Q: np.ndarray, qn: np.ndarray, fn: str):
+    """rows×k cosines of M's rows to Q's columns (norms ``qn``). A
+    zero-norm row raises, as for the query side."""
+    nrm = _fold_rows(M, M)
+    if not nrm.all():
+        raise ValueError(f"{fn}: zero-norm embedding vector")
+    return _fold(M, Q) / (np.sqrt(nrm)[:, None] * qn[None, :])
 
 
 def pair_dot_pandas(dim: int):
-    """Arrow-batched dot product of two array columns, fold-exact (see
-    block comment above). Inputs must be non-null ``dim``-width arrays;
-    returns double (a null vector raises ``ValueError``). ~64 SIMD ops per
-    Arrow batch instead of ~450 interpreted expression nodes per row."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
+    """Arrow-batched dot product of two non-null ``dim``-width array
+    columns, fold-exact; returns double. ~dim SIMD ops per Arrow batch
+    instead of ~450 interpreted expression nodes per row."""
 
     @pandas_udf("double")
     def _dot(a: pd.Series, b: pd.Series) -> pd.Series:
-        if len(a) == 0:
-            return pd.Series([], dtype="float64")
-        A = _stack_vectors(a, "pair_dot_pandas")
-        B = _stack_vectors(b, "pair_dot_pandas")
-        if A.shape[1] != dim or B.shape[1] != dim:
-            # loud, not silent: a wider vector would otherwise fold only
-            # its first `dim` elements and return a WRONG dot product
-            raise ValueError(
-                f"pair_dot_pandas(dim={dim}) got vectors of width "
-                f"{A.shape[1]}/{B.shape[1]}"
+        return pd.Series(
+            _fold_rows(
+                _stack_vectors(a, "pair_dot_pandas", dim),
+                _stack_vectors(b, "pair_dot_pandas", dim),
             )
-        acc = np.zeros(len(A), dtype="float64")
-        for i in range(dim):
-            acc = acc + A[:, i] * B[:, i]
-        return pd.Series(acc)
+        )
 
     return _dot
 
 
 def query_cosine_pandas(query_vec: Sequence[float]):
-    """Arrow-batched cosine-to-a-LITERAL-query scorer, fold-exact — the
-    scalar twin of ``cosine(vec, _lit_vec(q))``: same sequential fold
-    over dimensions (vectorized over rows), query norm folded in Python
-    in the same IEEE order, so scores are bit-identical to the HOF form
-    (pinned by test_arrow_vector_math_is_fold_exact's method). This is
-    the brute-force scan's hot path: at 10⁹ rows per query the
-    interpreted HOF fold costs ~8 µs/row; the Arrow fold is ~dim SIMD
-    ops per batch."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
-    q = [float(x) for x in query_vec]
-    dim = len(q)
-    qn_acc = 0.0
-    for x in q:
-        qn_acc = qn_acc + x * x
-    qn = math.sqrt(qn_acc)
-    if qn == 0.0:
-        raise ValueError("query_cosine_pandas: zero-norm query vector")
+    """Arrow-batched cosine of a vector column to one query vector,
+    fold-exact. This is the brute-force scan's hot path: at 10⁹ rows per
+    query the interpreted HOF fold costs ~8 µs/row; the Arrow fold is
+    ~dim SIMD ops per batch."""
+    Q, qn = _query_matrix([query_vec], "query_cosine_pandas", "query")
+    dim = Q.shape[0]
 
     @pandas_udf("double")
     def _score(v: pd.Series) -> pd.Series:
-        if len(v) == 0:
-            return pd.Series([], dtype="float64")
-        M = _stack_vectors(v, "query_cosine_pandas")
-        if M.shape[1] != dim:
-            raise ValueError(
-                f"query_cosine_pandas: query dim {dim} != vector width "
-                f"{M.shape[1]}"
-            )
-        acc = np.zeros(len(M), dtype="float64")
-        nrm = np.zeros(len(M), dtype="float64")
-        for i in range(dim):
-            col = M[:, i]
-            acc = acc + col * q[i]
-            nrm = nrm + col * col
-        if not nrm.all():
-            # parity with the Column form under ANSI mode (the session
-            # default): 0/0 raises DIVIDE_BY_ZERO there, so raise loudly
-            # here instead of silently scoring NaN
-            raise ValueError(
-                "query_cosine_pandas: zero-norm embedding vector"
-            )
-        return pd.Series(acc / (np.sqrt(nrm) * qn))
+        M = _stack_vectors(v, "query_cosine_pandas", dim)
+        return pd.Series(_cosines(M, Q, qn, "query_cosine_pandas")[:, 0])
 
     return _score
 
@@ -177,43 +153,28 @@ def query_cosine_pandas(query_vec: Sequence[float]):
 def band_buckets_pandas(
     planes: int, bands: int, seed: int, dim: int
 ):
-    """Arrow-batched twin of :func:`hyperplane_band_buckets` — same
-    deterministic LCG planes, same sign-bit packing, fold-exact
-    projections (the accumulator walks dimensions in order, vectorized
-    across rows AND planes), so every band id is bit-identical to the
-    HOF form. Because the per-batch cost is ~``dim`` numpy ops
-    regardless of ``planes``, the plane budget is effectively free here
-    — which is what makes fine (8-12 bit) bands affordable, and fine
-    bands are what keep same-bucket candidate groups small on dense
-    embedding regions."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
-    assert planes % bands == 0, "planes must divide evenly into bands"
+    """Array of ``bands`` band-bucket ids per vector (OR-construction):
+    the deterministic LCG plane set splits into ``bands`` contiguous
+    groups; each band's id packs that group's sign bits (bit j = plane
+    ``b*per + j``). Two vectors are LSH candidates when ANY band id
+    matches — band collision probability (1-θ/π)^(planes/bands) per band,
+    so recall rises with ``bands`` while candidate volume stays bounded
+    by the per-band bit width. The projections are fold-exact, and the
+    per-batch cost is ~``dim`` numpy ops regardless of ``planes`` — which
+    is what makes fine (8-12 bit) bands affordable, and fine bands are
+    what keep same-bucket candidate groups small on dense embedding
+    regions."""
+    if planes % bands:
+        raise ValueError("planes must divide evenly into bands")
     per = planes // bands
-    P = np.array(_hyperplanes(dim, planes, seed), dtype="float64").T  # dim×planes
+    P = np.array(_hyperplanes(dim, planes, seed), dtype="float64").T
+    shifts = np.arange(per, dtype="int64")
 
     @pandas_udf("array<long>")
     def _buckets(v: pd.Series) -> pd.Series:
-        if len(v) == 0:
-            return pd.Series([], dtype="object")
-        M = _stack_vectors(v, "band_buckets_pandas")
-        if M.shape[1] != dim:
-            # a wrong plane width would silently bucket on a prefix —
-            # the exact failure mode the mandatory dim= exists to stop
-            raise ValueError(
-                f"band_buckets_pandas(dim={dim}) got vectors of width "
-                f"{M.shape[1]}"
-            )
-        acc = np.zeros((len(M), planes), dtype="float64")
-        for i in range(dim):
-            acc = acc + M[:, i : i + 1] * P[i : i + 1, :]
-        bits = acc > 0
-        out = np.zeros((len(M), bands), dtype="int64")
-        for b in range(bands):
-            for j in range(per):
-                out[:, b] += bits[:, b * per + j].astype("int64") << j
-        return pd.Series(list(out))
+        M = _stack_vectors(v, "band_buckets_pandas", dim)
+        bits = (_fold(M, P) > 0).astype("int64").reshape(len(M), bands, per)
+        return pd.Series(list((bits << shifts).sum(axis=2)))
 
     return _buckets
 
@@ -226,18 +187,14 @@ def cosine_topk(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact top-k by cosine to one query vector: (id, sim) — map + top-k
-    reduce, zero shuffles. Scoring is the Arrow fold-exact scan
-    (:func:`query_cosine_pandas` — bit-identical to the Column-HOF
-    form, ~100× cheaper per row); vectors must be non-null and match
-    the query's width.
+    reduce, zero shuffles, scored by :func:`query_cosine_pandas`; vectors
+    must be non-null and match the query's width.
 
     Crossover note (measured): the Arrow scan carries ~0.4 s of fixed
-    Python-worker roundtrip per query, so below ~10⁶ rows the
-    interpreted HOF form is faster wall-clock locally (0.17 s vs 0.59 s
-    on 16k rows); per-row the Arrow fold is ~100× cheaper, which is
-    what matters for the brute-force scan this function exists for —
-    compose ``cosine(vec, _lit_vec(q))`` directly if you are scoring a
-    tiny relation inside a larger plan."""
+    Python-worker roundtrip per query, so below ~10⁶ rows an interpreted
+    Column fold is faster wall-clock locally (0.17 s vs 0.59 s on 16k
+    rows); per-row the Arrow fold is ~100× cheaper, which is what
+    matters for the brute-force scan this function exists for."""
     scored = emb_df.select(
         F.col(id_col), query_cosine_pandas(query_vec)(F.col(vec_col)).alias("sim")
     )
@@ -246,100 +203,42 @@ def cosine_topk(
 
 def cosine_topk_multi(
     emb_df: DataFrame,
-    queries_df: DataFrame,
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    q_id_col: str = "q_id",
-    q_vec_col: str = "q_vec",
-) -> DataFrame:
-    """Per-query exact top-k: broadcast crossJoin + window rank.
-
-    (q_id, id, sim, rank) — the fact table is scanned once; the query side
-    is broadcast, so no fact shuffle before the rank window."""
-    joined = emb_df.crossJoin(F.broadcast(queries_df))
-    scored = joined.select(
-        F.col(q_id_col),
-        F.col(id_col),
-        cosine(F.col(vec_col), F.col(q_vec_col)).alias("sim"),
-    )
-    w = Window.partitionBy(q_id_col).orderBy(F.desc("sim"), F.col(id_col))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
-
-
-def cosine_topk_multi_pandas(
-    emb_df: DataFrame,
     queries: Sequence,
     k: int = 10,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Batched multi-query exact top-k, the AT-SCALE shape of
-    :func:`cosine_topk_multi`: ``queries`` is a small driver-side list of
-    ``(q_id, vector)`` pairs (the crossJoin variant broadcasts the same
-    relation — both assume a broadcastable query set).
+    """Per-query exact top-k: (q_id, id, sim, rank). ``queries`` is a
+    small driver-side list of ``(q_id, vector)`` pairs.
 
     Two things make this the 100 TB path: (1) scoring is ONE Arrow
-    stage — every batch scores all queries against all its rows in
-    numpy, fold-exact over dimensions (bit-identical sims to the HOF
-    crossJoin, pinned by test), so no q×n row explosion ever
-    materializes in the plan; (2) each batch emits only its own top-k
-    per query, so the final exact window ranks ≤ k·batches rows instead
-    of q×n (top-k of per-batch top-ks contains the global top-k for any
-    batch boundaries). Output matches :func:`cosine_topk_multi`:
-    (q_id, id, sim, rank)."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf  # noqa: F401 (parity import)
-
+    stage — every batch scores all queries against all its rows,
+    fold-exact, so no q×n row explosion ever materializes in the plan;
+    (2) each batch emits only its own top-k per query, so the final
+    exact window ranks ≤ k·batches rows instead of q×n (top-k of
+    per-batch top-ks contains the global top-k for any batch
+    boundaries)."""
     q_ids = [q[0] for q in queries]
-    Q = [[float(x) for x in q[1]] for q in queries]
-    dim = len(Q[0])
-    nq = len(Q)
-    # dim×nq, fold axis first — acc walks dimensions in order
-    QT = [[Q[qi][i] for qi in range(nq)] for i in range(dim)]
+    Q, qn = _query_matrix([q[1] for q in queries], "cosine_topk_multi", "query")
+    dim = Q.shape[0]
 
     def score(batches):
-        import numpy as np  # noqa: F811 — runs on executors
-        import pandas as pd
-
-        Qm = np.array(QT, dtype="float64")  # dim × nq
-        qn = np.zeros(nq, dtype="float64")
-        for i in range(dim):
-            qn = qn + Qm[i, :] * Qm[i, :]
-        qn = np.sqrt(qn)
         for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            M = _stack_vectors(pdf[vec_col], "cosine_topk_multi_pandas")
-            acc = np.zeros((len(M), nq), dtype="float64")
-            nrm = np.zeros(len(M), dtype="float64")
-            for i in range(dim):
-                col = M[:, i]
-                acc = acc + col[:, None] * Qm[i : i + 1, :]
-                nrm = nrm + col * col
-            if not nrm.all():
-                # ANSI parity: the crossJoin form raises DIVIDE_BY_ZERO
-                raise ValueError(
-                    "cosine_topk_multi_pandas: zero-norm embedding vector"
-                )
-            sims = acc / (np.sqrt(nrm)[:, None] * qn[None, :])
+            M = _stack_vectors(pdf[vec_col], "cosine_topk_multi", dim)
+            sims = _cosines(M, Q, qn, "cosine_topk_multi")
             ids = pdf[id_col].to_numpy()
             out_q, out_id, out_s = [], [], []
             kk = min(k, len(M))
-            for qi in range(nq):
+            for qi, q_id in enumerate(q_ids):
                 s = sims[:, qi]
                 # top-k by (sim desc, id asc) — same tiebreak as the
                 # window. Spark's desc ordering treats NaN as LARGEST
-                # (a zero-norm vector scores NaN), while numpy sorts
-                # NaN last either sign — map NaN to -inf on the negated
-                # key so it sorts first, matching the crossJoin variant
-                # for any batch boundaries.
+                # (a NaN element scores NaN), while numpy sorts NaN last
+                # either sign — map NaN to -inf on the negated key so it
+                # sorts first for any batch boundaries.
                 key = np.where(np.isnan(s), -np.inf, -s)
                 order = np.lexsort((ids, key))[:kk]
-                out_q.extend([q_ids[qi]] * len(order))
+                out_q.extend([q_id] * len(order))
                 out_id.extend(ids[order])
                 out_s.extend(s[order])
             yield pd.DataFrame(
@@ -378,45 +277,6 @@ def _hyperplanes(dim: int, planes: int, seed: int) -> List[List[float]]:
     return out
 
 
-def hyperplane_bucket(
-    vec: Column, planes: int = 16, seed: int = 42, dim: int = 64
-) -> Column:
-    """Bucket id from sign bits of <vec, plane_i> — a single fused
-    projection per row."""
-    hp = _hyperplanes(dim, planes, seed)
-    bucket = None
-    for i, plane in enumerate(hp):
-        bit = F.when(dot(vec, _lit_vec(plane)) > 0, F.lit(1 << i)).otherwise(F.lit(0))
-        bucket = bit if bucket is None else bucket + bit
-    return bucket.cast("long")
-
-
-def hyperplane_band_buckets(
-    vec: Column, planes: int = 16, bands: int = 4, seed: int = 42,
-    dim: int = 64,
-) -> Column:
-    """Array of ``bands`` band-bucket ids (OR-construction): the plane set
-    splits into ``bands`` contiguous groups; each band's id packs that
-    group's sign bits. Two vectors are LSH candidates when ANY band id
-    matches — band collision probability (1-θ/π)^(planes/bands) per band,
-    so recall rises with ``bands`` while candidate volume stays bounded by
-    the per-band bit width. One fused projection per row."""
-    assert planes % bands == 0, "planes must divide evenly into bands"
-    per = planes // bands
-    hp = _hyperplanes(dim, planes, seed)
-    band_cols = []
-    for b in range(bands):
-        acc = None
-        for j in range(per):
-            i = b * per + j
-            bit = F.when(
-                dot(vec, _lit_vec(hp[i])) > 0, F.lit(1 << j)
-            ).otherwise(F.lit(0))
-            acc = bit if acc is None else acc + bit
-        band_cols.append(acc.cast("long"))
-    return F.array(*band_cols)
-
-
 def ann_lsh_topk(
     emb_df: DataFrame,
     query_vec: Sequence[float],
@@ -432,10 +292,9 @@ def ann_lsh_topk(
 
     The bucket column would be precomputed/persisted in a real pipeline
     (write-once per table); then each query touches ~(1+planes)/2^planes
-    of the data. The bucket projection and candidate scoring run on the
-    Arrow fold-exact twins (bit-identical to the Column-HOF forms —
-    ``band_buckets_pandas`` with one band packs exactly
-    ``hyperplane_bucket``'s bit order).
+    of the data. The bucket is :func:`band_buckets_pandas` with one band,
+    whose bit i is plane i's sign bit — the same packing as the
+    driver-side query bucket below.
     """
     dim = len(query_vec)
     hp = _hyperplanes(dim, planes, seed)
@@ -498,19 +357,22 @@ def ivf_assign(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """List assignment against FIXED centroid literals: list_id = argmax
-    cosine (first index on exact ties). One fused projection — no fit, no
-    shuffle — so the assignment is a pure deterministic function of
-    (vector, centroids) that an external SQL oracle can replay exactly;
-    use :func:`ivf_index` when you want learned (k-means) centroids
-    instead. Same persistence story: write list_id once per table."""
-    v = F.col(vec_col)
-    scores = F.array(*[cosine(v, _lit_vec(c)) for c in centroids])
+    cosine (first index on exact ties). One Arrow UDF scores every
+    centroid, fold-exact — no fit, no shuffle — so the assignment is a
+    pure deterministic function of (vector, centroids) that an external
+    SQL oracle can replay exactly; use :func:`ivf_index` when you want
+    learned (k-means) centroids instead. Same persistence story: write
+    list_id once per table."""
+    C, cn = _query_matrix(centroids, "ivf_assign", "centroid")
+    dim = C.shape[0]
+
+    @pandas_udf("int")
+    def _assign(v: pd.Series) -> pd.Series:
+        sims = _cosines(_stack_vectors(v, "ivf_assign", dim), C, cn, "ivf_assign")
+        return pd.Series(np.argmax(sims, axis=1).astype("int32"))
+
     return emb_df.select(
-        F.col(id_col),
-        v.alias(vec_col),
-        (F.array_position(scores, F.array_max(scores)) - 1)
-        .cast("int")
-        .alias("list_id"),
+        F.col(id_col), F.col(vec_col), _assign(F.col(vec_col)).alias("list_id")
     )
 
 
@@ -528,33 +390,12 @@ def ivf_topk(
 
     With list_id as a partition column the probe filter becomes partition
     pruning — each query touches ~n_probe/n_lists of the data."""
-
-    def cos(a: Sequence[float], b: Sequence[float]) -> float:
-        num = sum(x * y for x, y in zip(a, b))
-        na = math.sqrt(sum(x * x for x in a)) or 1e-12
-        nb = math.sqrt(sum(x * x for x in b)) or 1e-12
-        return num / (na * nb)
-
-    ranked = sorted(
-        range(len(centroids)), key=lambda i: -cos(centroids[i], query_vec)
-    )
-    probe = ranked[:n_probe]
+    C, cn = _query_matrix(centroids, "ivf_topk", "centroid")
+    sims = _cosines(np.array([query_vec], dtype="float64"), C, cn, "ivf_topk")
+    # stable sort: equal scores keep the lower list id first
+    probe = np.argsort(-sims[0], kind="stable")[:n_probe].tolist()
     cand = assigned.filter(F.col("list_id").isin(probe))
     scored = cand.select(
         F.col(id_col), query_cosine_pandas(query_vec)(F.col(vec_col)).alias("sim")
     )
     return scored.orderBy(F.desc("sim"), F.col(id_col)).limit(k)
-
-
-def cosine_topk_pandas(
-    emb_df: DataFrame,
-    query_vec: Sequence[float],
-    k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Alias of :func:`cosine_topk` since round 5: the default scorer IS
-    the Arrow-batched numpy scan now (fold-exact — the earlier matmul
-    form here differed from the JVM fold in the last ulp, which this
-    module no longer tolerates anywhere). Kept for API compatibility."""
-    return cosine_topk(emb_df, query_vec, k, id_col, vec_col)

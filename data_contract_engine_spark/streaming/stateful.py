@@ -15,8 +15,8 @@ progress/integrity row per conversation per batch:
 * state is a compact bitmap-ish sorted tuple of seen turn indices capped
   at ``max_tracked`` (hot conversations degrade to count-only tracking so
   state stays bounded — the skew guard for state stores);
-* pair with ``withWatermark`` + state timeout in production to expire
-  idle conversations (GroupStateTimeout.ProcessingTimeTimeout).
+* state never expires: bounded state waits for watermark-driven expiry
+  (``EventTimeTimeout``), which neither operator implements yet.
 
 This is the (c)-tier custom operator path of the build rules: semantics
 (cross-batch conversation integrity) that no built-in stateless/stateful
@@ -134,7 +134,6 @@ def stream_near_dup_candidates(
     k: int = 3,
     num_hashes: int = 32,
     bands: int = 8,
-    timeout: str = "NoTimeout",
 ) -> DataFrame:
     """Streaming MinHash-LSH near-duplicate CANDIDATE pairs — the
     streaming twin of :func:`~..operators.dedup.lsh_candidates`.
@@ -153,8 +152,9 @@ def stream_near_dup_candidates(
     Semantics note: this is CANDIDATE generation (banding recall,
     precision unverified) — at 100 TB the pair stream feeds the batch
     exact-Jaccard verifier over the paired docs only, mirroring the
-    batch pipeline's verify stage. Pair with a processing-time
-    ``timeout`` to expire idle buckets and bound total state.
+    batch pipeline's verify stage. Bucket state never expires, so the
+    number of state rows grows with the distinct (band, bucket) keys
+    seen.
     """
     from pyspark.sql import functions as F
 
@@ -177,7 +177,7 @@ def stream_near_dup_candidates(
         outputStructType=NEAR_DUP_OUTPUT_SCHEMA,
         stateStructType=NEAR_DUP_STATE_SCHEMA,
         outputMode="append",
-        timeoutConf=getattr(GroupStateTimeout, timeout),
+        timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
 
@@ -185,7 +185,6 @@ def conversation_progress(
     stream_df: DataFrame,
     conv_col: str = "conv_id",
     turn_col: str = "turn_idx",
-    timeout: str = "NoTimeout",
 ) -> DataFrame:
     """Streaming per-conversation integrity tracking across micro-batches."""
     from pyspark.sql import functions as F
@@ -198,5 +197,5 @@ def conversation_progress(
         outputStructType=OUTPUT_SCHEMA,
         stateStructType=STATE_SCHEMA,
         outputMode="update",
-        timeoutConf=getattr(GroupStateTimeout, timeout),
+        timeoutConf=GroupStateTimeout.NoTimeout,
     )

@@ -26,7 +26,6 @@ _validate_resumable = checkpoint.validate_resumable
 def _cold(engine, *args, **kwargs):
     fresh = ContractEngine(
         engine.spark,
-        salted_aggregates=engine.salted_aggregates,
         vocab_tables=engine.vocab_tables,
         drift_baseline=engine.drift_baseline,
         drift_baseline_snapshot=engine.drift_baseline_snapshot,

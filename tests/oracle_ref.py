@@ -168,3 +168,102 @@ def word_grams_ref(text, k: int):
         lambda i: F.concat_ws(" ", F.slice(toks, i, k)),
     )
     return F.when(n >= k, grams).otherwise(F.array().cast("array<string>"))
+
+
+# --------------------------------------------------------------------------
+# Reference spec for the Arrow fold-exact vector kernels in
+# ``operators/similarity.py``: the Column higher-order-function forms of
+# the same math, a sequential fold over dimensions starting from 0.0 (the
+# DuckDB oracles replay it with list_reduce). The kernels must equal these
+# bit for bit. Too slow for production: Spark interprets the lambdas per
+# row and never compiles them into whole-stage codegen.
+# --------------------------------------------------------------------------
+
+
+def lit_vec(vec):
+    return F.array(*[F.lit(float(x)) for x in vec])
+
+
+def dot(a, b):
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+
+
+def norm(a):
+    return F.sqrt(
+        F.aggregate(
+            F.transform(a, lambda x: x.cast("double") * x.cast("double")),
+            F.lit(0.0),
+            lambda acc, x: acc + x,
+        )
+    )
+
+
+def cosine(a, b):
+    return dot(a, b) / (norm(a) * norm(b))
+
+
+def hyperplane_bucket(vec, planes=16, seed=42, dim=64):
+    """Bucket id from the sign bits of <vec, plane_i> (bit i = plane i)."""
+    from data_contract_engine_spark.operators.similarity import _hyperplanes
+
+    bucket = None
+    for i, plane in enumerate(_hyperplanes(dim, planes, seed)):
+        bit = F.when(dot(vec, lit_vec(plane)) > 0, F.lit(1 << i)).otherwise(
+            F.lit(0)
+        )
+        bucket = bit if bucket is None else bucket + bit
+    return bucket.cast("long")
+
+
+def hyperplane_band_buckets(vec, planes=16, bands=4, seed=42, dim=64):
+    """Array of ``bands`` band-bucket ids: band b packs the sign bits of
+    planes b*per .. b*per+per-1 (bit j = plane b*per+j)."""
+    from data_contract_engine_spark.operators.similarity import _hyperplanes
+
+    per = planes // bands
+    hp = _hyperplanes(dim, planes, seed)
+    band_cols = []
+    for b in range(bands):
+        acc = None
+        for j in range(per):
+            bit = F.when(
+                dot(vec, lit_vec(hp[b * per + j])) > 0, F.lit(1 << j)
+            ).otherwise(F.lit(0))
+            acc = bit if acc is None else acc + bit
+        band_cols.append(acc.cast("long"))
+    return F.array(*band_cols)
+
+
+def cosine_topk_multi(emb_df, queries_df, k=10, id_col="vec_id",
+                      vec_col="embedding", q_id_col="q_id", q_vec_col="q_vec"):
+    """Per-query exact top-k (q_id, id, sim, rank) as a broadcast
+    crossJoin scored by :func:`cosine`, ranked by (sim desc, id asc)."""
+    from pyspark.sql import Window
+
+    scored = emb_df.crossJoin(F.broadcast(queries_df)).select(
+        F.col(q_id_col),
+        F.col(id_col),
+        cosine(F.col(vec_col), F.col(q_vec_col)).alias("sim"),
+    )
+    w = Window.partitionBy(q_id_col).orderBy(F.desc("sim"), F.col(id_col))
+    return scored.withColumn("rank", F.row_number().over(w)).filter(
+        F.col("rank") <= k
+    )
+
+
+def ivf_assign(emb_df, centroids, id_col="vec_id", vec_col="embedding"):
+    """list_id = argmax cosine to the centroid literals, first index on
+    exact ties."""
+    v = F.col(vec_col)
+    scores = F.array(*[cosine(v, lit_vec(c)) for c in centroids])
+    return emb_df.select(
+        F.col(id_col),
+        v,
+        (F.array_position(scores, F.array_max(scores)) - 1)
+        .cast("int")
+        .alias("list_id"),
+    )

@@ -6,6 +6,7 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
+import oracle_ref as ref
 from data_contract_engine_spark.operators import (
     dedup,
     multimodal,
@@ -84,24 +85,29 @@ def test_cosine_topk_and_variants(spark):
     top = similarity.cosine_topk(emb, [1.0, 0.0, 0.0], 2).collect()
     assert [r["vec_id"] for r in top] == [0, 1]
     assert top[0]["sim"] == pytest.approx(1.0)
-    # pandas scorer agrees with the JVM fold
-    ptop = similarity.cosine_topk_pandas(emb, [1.0, 0.0, 0.0], 2).collect()
-    assert [r["vec_id"] for r in ptop] == [0, 1]
-    for a, b in zip(top, ptop):
-        assert a["sim"] == pytest.approx(b["sim"], abs=1e-12)
-    # multi-query path
-    qdf = spark.createDataFrame(
-        [(0, [1.0, 0.0, 0.0]), (1, [0.0, 1.0, 0.0])],
-        "q_id long, q_vec array<float>",
+    # the Arrow scorer equals the reference Column fold bit for bit
+    ref_top = (
+        emb.select(
+            "vec_id",
+            ref.cosine(F.col("embedding"), ref.lit_vec([1.0, 0.0, 0.0]))
+            .alias("sim"),
+        )
+        .orderBy(F.desc("sim"), "vec_id")
+        .limit(2)
+        .collect()
     )
-    multi = similarity.cosine_topk_multi(emb, qdf, k=1).collect()
+    assert list(map(tuple, top)) == list(map(tuple, ref_top))
+    # multi-query path
+    multi = similarity.cosine_topk_multi(
+        emb, [(0, [1.0, 0.0, 0.0]), (1, [0.0, 1.0, 0.0])], k=1
+    ).collect()
     got = {r["q_id"]: r["vec_id"] for r in multi}
     assert got == {0: 0, 1: 2}
 
 
 def test_cosine_topk_multi_pandas_matches_crossjoin(spark):
     """The Arrow batched multi-query scorer (per-batch top-k
-    pre-reduction) returns exactly the crossJoin+window result —
+    pre-reduction) returns exactly the reference crossJoin+window result —
     bit-identical sims (fold-exact) and identical ranks/tiebreaks —
     on random vectors at a non-default dim, k larger than some batches."""
     import random
@@ -117,16 +123,13 @@ def test_cosine_topk_multi_pandas_matches_crossjoin(spark):
     ).repartition(8)
     queries = [(7, rows[0][1]), (8, rows[5][1]), (9, [1.0] * 12)]
     qdf = spark.createDataFrame(queries, "q_id long, q_vec array<double>")
-    ref = sorted(
-        map(tuple, similarity.cosine_topk_multi(emb, qdf, k=13).collect())
+    want = sorted(
+        map(tuple, ref.cosine_topk_multi(emb, qdf, k=13).collect())
     )
     got = sorted(
-        map(
-            tuple,
-            similarity.cosine_topk_multi_pandas(emb, queries, k=13).collect(),
-        )
+        map(tuple, similarity.cosine_topk_multi(emb, queries, k=13).collect())
     )
-    assert ref == got  # exact tuple equality: ids, BIT-level sims, ranks
+    assert want == got  # exact tuple equality: ids, BIT-level sims, ranks
 
     # zero-norm vectors: the crossJoin form raises DIVIDE_BY_ZERO under
     # ANSI mode (the session default), so the batched scorer must raise
@@ -139,9 +142,24 @@ def test_cosine_topk_multi_pandas_matches_crossjoin(spark):
         )
     )
     with pytest.raises(Exception, match="DIVIDE_BY_ZERO|zero-norm"):
-        similarity.cosine_topk_multi(bad, qdf, k=3).collect()
+        ref.cosine_topk_multi(bad, qdf, k=3).collect()
     with pytest.raises(Exception, match="zero-norm"):
-        similarity.cosine_topk_multi_pandas(bad, queries, k=3).collect()
+        similarity.cosine_topk_multi(bad, queries, k=3).collect()
+
+
+# every Arrow vector UDF, applied to a width-2 embedding column
+VECTOR_UDFS = {
+    "query_cosine_pandas": lambda emb, v: emb.select(
+        similarity.query_cosine_pandas([1.0, 0.0])(v)),
+    "band_buckets_pandas": lambda emb, v: emb.select(
+        similarity.band_buckets_pandas(4, 2, 1, dim=2)(v)),
+    "pair_dot_pandas": lambda emb, v: emb.select(
+        similarity.pair_dot_pandas(2)(v, v)),
+    "cosine_topk_multi": lambda emb, v: similarity.cosine_topk_multi(
+        emb, [(0, [1.0, 0.0])], k=1),
+    "ivf_assign": lambda emb, v: similarity.ivf_assign(
+        emb, [[1.0, 0.0], [0.0, 1.0]]),
+}
 
 
 def test_arrow_vector_udfs_name_null_vectors(spark):
@@ -151,19 +169,27 @@ def test_arrow_vector_udfs_name_null_vectors(spark):
     emb = spark.createDataFrame(
         [(0, [1.0, 0.0]), (1, None)], "vec_id long, embedding array<double>"
     ).coalesce(1)
-    v = F.col("embedding")
-    cases = {
-        "query_cosine_pandas": emb.select(
-            similarity.query_cosine_pandas([1.0, 0.0])(v)),
-        "band_buckets_pandas": emb.select(
-            similarity.band_buckets_pandas(4, 2, 1, dim=2)(v)),
-        "pair_dot_pandas": emb.select(similarity.pair_dot_pandas(2)(v, v)),
-        "cosine_topk_multi_pandas": similarity.cosine_topk_multi_pandas(
-            emb, [(0, [1.0, 0.0])], k=1),
-    }
-    for fn, df in cases.items():
+    for fn, make in VECTOR_UDFS.items():
         with pytest.raises(Exception, match=f"{fn}: null embedding vector"):
-            df.collect()
+            make(emb, F.col("embedding")).collect()
+
+
+@pytest.mark.parametrize("fn", sorted(VECTOR_UDFS))
+def test_arrow_vector_udfs_name_width_mismatch(spark, fn):
+    """Wider, narrower and mixed-width batches all raise a named
+    ValueError. Folding only the first two elements of a wider vector
+    would return a wrong score ([1, 0, 5] against query [1, 0] would
+    score 1.0)."""
+    for widths in ([3], [1], [2, 3]):
+        emb = spark.createDataFrame(
+            [(i, [1.0] + [0.0] * (w - 2) + [5.0] if w > 1 else [1.0])
+             for i, w in enumerate(widths)],
+            "vec_id long, embedding array<double>",
+        ).coalesce(1)
+        with pytest.raises(
+            Exception, match=f"{fn}: expected vectors of width 2"
+        ):
+            VECTOR_UDFS[fn](emb, F.col("embedding")).collect()
 
 
 def test_ann_lsh_recovers_exact_neighbor(spark):
@@ -431,21 +457,25 @@ def test_embedding_near_duplicates_banded_lsh(spark):
 
 
 def test_arrow_vector_math_is_fold_exact(spark):
-    """The Arrow numpy twins (band_buckets_pandas, pair_dot_pandas) must
-    be BIT-IDENTICAL to the Column-HOF fold — the DuckDB oracles replay
-    the sequential list_reduce fold, so any reassociation (np.dot /
-    matmul pairwise summation) would silently break gate hashes. Pinned
-    on random float32 vectors (exact-widening cast path) plus doubles
-    with magnitude spread that makes association order visible."""
+    """The Arrow kernels (band buckets, query cosine, pair dot, IVF
+    assign) must be BIT-IDENTICAL to the reference Column-HOF fold — the
+    DuckDB oracles replay the sequential list_reduce fold, so any
+    reassociation (np.dot / matmul pairwise summation) would silently
+    break gate hashes. Pinned on random float32 vectors (exact-widening
+    cast path) plus doubles with magnitude spread that makes association
+    order visible."""
     import random
+    import struct
 
     from data_contract_engine_spark.operators.similarity import (
         band_buckets_pandas,
-        cosine,
-        dot,
-        hyperplane_band_buckets,
+        ivf_assign,
         pair_dot_pandas,
+        query_cosine_pandas,
     )
+
+    def bits(xs):
+        return [struct.pack("d", x) for x in xs]
 
     rnd = random.Random(7)
     rows32 = [
@@ -461,21 +491,29 @@ def test_arrow_vector_math_is_fold_exact(spark):
         emb = spark.createDataFrame(
             rows, f"vec_id long, embedding array<{typ}>"
         )
+        v = F.col("embedding")
+        # one band of 8 planes is ann_lsh_topk's bucket
         hof = emb.select(
             "vec_id",
-            hyperplane_band_buckets(
-                F.col("embedding"), planes=12, bands=3, seed=42, dim=24
+            ref.hyperplane_band_buckets(
+                v, planes=12, bands=3, seed=42, dim=24
             ).alias("bb"),
+            ref.hyperplane_bucket(v, planes=8, seed=42, dim=24),
         )
         arrow = emb.select(
             "vec_id",
-            band_buckets_pandas(planes=12, bands=3, seed=42, dim=24)(
-                F.col("embedding")
-            ).alias("bb"),
+            band_buckets_pandas(planes=12, bands=3, seed=42, dim=24)(v)
+            .alias("bb"),
+            F.element_at(band_buckets_pandas(8, 1, 42, dim=24)(v), 1),
         )
         assert sorted(map(tuple, hof.collect())) == sorted(
             map(tuple, arrow.collect())
         )
+        q = [float(x) for x in rows[3][1]]
+        hof_q, arrow_q = zip(*emb.orderBy("vec_id").select(
+            ref.cosine(v, ref.lit_vec(q)), query_cosine_pandas(q)(v)
+        ).collect())
+        assert bits(hof_q) == bits(arrow_q)
         pairs = emb.alias("a").join(
             emb.alias("b"), F.col("a.vec_id") < F.col("b.vec_id")
         ).select(
@@ -483,7 +521,7 @@ def test_arrow_vector_math_is_fold_exact(spark):
         )
         hof_cos = [
             r[0] for r in pairs.select(
-                cosine(F.col("va"), F.col("vb"))
+                ref.cosine(F.col("va"), F.col("vb"))
             ).collect()
         ]
         dot_udf = pair_dot_pandas(24)
@@ -496,12 +534,23 @@ def test_arrow_vector_math_is_fold_exact(spark):
                 )
             ).collect()
         ]
-        # bit-identical, not approx: struct.pack equality
-        import struct
+        assert bits(hof_cos) == bits(arrow_cos)
 
-        assert [struct.pack("d", x) for x in hof_cos] == [
-            struct.pack("d", x) for x in arrow_cos
-        ]
+        # IVF assign: argmax of the same cosines, first index on ties —
+        # centroid 2 duplicates centroid 0, so it must never win
+        cents = [[float(x) for x in rows[i][1]] for i in (0, 1, 0, 2, 5, 8)]
+        want = sorted(map(tuple, ref.ivf_assign(emb, cents).collect()))
+        got = sorted(map(tuple, ivf_assign(emb, cents).collect()))
+        assert want == got
+        ids = {r[2] for r in got}
+        assert 0 in ids and 2 not in ids
+        zero = emb.union(spark.createDataFrame(
+            [(99, [0.0] * 24)], f"vec_id long, embedding array<{typ}>"
+        ))
+        with pytest.raises(Exception, match="DIVIDE_BY_ZERO"):
+            ref.ivf_assign(zero, cents).collect()
+        with pytest.raises(Exception, match="ivf_assign: zero-norm"):
+            ivf_assign(zero, cents).collect()
 
 
 def test_stdlib_media_decoders_end_to_end(spark):
@@ -1819,7 +1868,9 @@ def test_semantic_dedup_exact_and_lsh(spark):
                                   [0.7, 0.72, 0, 0, 0, 0, 0, 0]])
     got = {r["vec_id"]: r["list_id"] for r in assigned.collect()}
     assert got[10] != got[11]
-    pairs = dedup.semantic_dedup_pairs(assigned, threshold=0.5, exact=True)
+    pairs = dedup.semantic_dedup_pairs(
+        assigned, threshold=0.5, exact=True, dim=8
+    )
     assert pairs.count() == 0
 
     # plan sanity: no cartesian product anywhere in the LSH pair stage

@@ -414,9 +414,7 @@ def test_multi_uniqueness_single_job(spark, monkeypatch):
 
     for key in keys:
         label = key if isinstance(key, str) else ",".join(key)
-        assert fused[label] == uniq_op.duplicate_report(
-            df, key, salted=False
-        ), label
+        assert fused[label] == uniq_op.duplicate_report(df, key), label
     # NULL keys participate as values (reference parity), and the fused
     # path keeps that: (NULL, 4) is a duplicate composite key
     assert fused["conv_id,turn_idx"][0] == 2  # ('a',1) and (NULL,4)
